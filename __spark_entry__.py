@@ -1383,8 +1383,8 @@ def oracle_sql() -> dict[str, str]:
                   FROM t)
             SELECT source,
                    count(*) AS n_docs,
-                   sum(nt) AS total_tokens,
-                   sum(nc) AS total_chars,
+                   CAST(sum(nt) AS BIGINT) AS total_tokens,
+                   CAST(sum(nc) AS BIGINT) AS total_chars,
                    round(CAST(sum(CAST(quality AS DECIMAL(18,2))) AS DOUBLE)
                          / count(*), 6) AS avg_quality
             FROM q GROUP BY source

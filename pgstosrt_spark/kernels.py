@@ -34,7 +34,7 @@ import pandas as pd
 
 from .pgs.decode import decode_media_payload, decode_to_display_sets
 from .pgs.model import PcsData
-from .pgs.ocr import GlyphAtlasOcr, OcrBackend
+from .pgs.ocr import GlyphAtlasOcr, OcrBackend, wants_mask
 from .pgs.srt import cue_text
 
 CUE_SCHEMA = (
@@ -228,6 +228,7 @@ def make_ocr_kernel(
         from .pgs.compose import rasterize
 
         ocr = backend or GlyphAtlasOcr()
+        mask = wants_mask(ocr)
         for pdf in batches:
             c_doc: list = []
             c_off: list = []
@@ -250,7 +251,9 @@ def make_ocr_kernel(
                     try:
                         pcs: PcsData = pickle.loads(bytes(blob))
                         img = rasterize(
-                            pcs, multi_object_opacity_fix=multi_object_opacity_fix
+                            pcs,
+                            multi_object_opacity_fix=multi_object_opacity_fix,
+                            mask=mask,
                         )
                         text = ocr.recognize(img)
                         kind, out = "cue", cue_text(pcs.start, pcs.end, text)

@@ -27,7 +27,7 @@ from .ebml import EBML_MAGIC, mkv_pgs_packets
 from .compose import rasterize
 from .merge import apply_duplicate_merge
 from .model import Cue, DecodeError, PcsData
-from .ocr import OcrBackend, default_backend
+from .ocr import OcrBackend, default_backend, wants_mask
 from .srt import cue_text
 
 __all__ = [
@@ -89,13 +89,17 @@ def display_sets_to_cues(
     The reference drops items whose decode/OCR throws (PgsOcr.cs:103-106);
     we do the same on the output sequence but surface the count via the
     returned cues' ``seq`` gaps being *absent* — kernels additionally emit
-    metric rows (never silent).
+    metric rows (never silent).  A backend with ``wants_mask`` gets the
+    unpadded opacity mask instead of the RGBA canvas (compose.py).
     """
     backend = backend or default_backend()
+    mask = wants_mask(backend)
     cues: list[Cue] = []
     for i, pcs in enumerate(sets):
         try:
-            img = rasterize(pcs, multi_object_opacity_fix=multi_object_opacity_fix)
+            img = rasterize(
+                pcs, multi_object_opacity_fix=multi_object_opacity_fix, mask=mask
+            )
             text = backend.recognize(img)
         except DecodeError:
             continue  # reference: log + drop (PgsOcr.cs:103-106)

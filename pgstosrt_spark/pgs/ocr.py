@@ -7,6 +7,13 @@ default backend is a deterministic glyph-atlas template matcher — the exact
 inverse of the fixture encoder's font — giving byte-for-byte reproducible
 text for fixtures and benchmarks.  A real-Tesseract backend plugs in behind
 the same interface when ``pytesseract`` is available (not in this image).
+
+Canvas contract: ``recognize`` receives the RGBA canvas of
+``compose.rasterize`` (uint8 (H, W, 4), +25 px pad on single-object
+decodes) unless the backend sets the class attribute ``wants_mask = True``;
+then the decode path hands it the unpadded (H, W) bool opacity mask
+instead, skipping the palette gather, the 4-channel canvas and the pad.
+Backends without the attribute get RGBA.
 """
 
 from __future__ import annotations
@@ -28,15 +35,24 @@ class OcrBackend(Protocol):
     def recognize(self, rgba: np.ndarray) -> str: ...
 
 
+def wants_mask(backend: OcrBackend) -> bool:
+    """Whether ``backend`` declares it reads only the opacity mask."""
+    return bool(getattr(backend, "wants_mask", False))
+
+
 class GlyphAtlasOcr:
     """Registration-free template match against the 5x7 atlas.
 
-    Works on any canvas produced by the decode path (the +25 px pad and
-    multi-object offsets shift content; matching is on cropped cells).
+    Reads only which pixels are opaque, so it asks for the (H, W) bool
+    mask; an RGBA canvas (alpha > 0) is accepted too.  Matching is on
+    cropped cells, so the +25 px pad and multi-object offsets of the RGBA
+    form do not change the text.
     """
 
-    def recognize(self, rgba: np.ndarray) -> str:
-        mask = (rgba[:, :, 3] > 0).astype(np.uint8)
+    wants_mask = True
+
+    def recognize(self, img: np.ndarray) -> str:
+        mask = img if img.ndim == 2 else img[:, :, 3] > 0
         if not mask.any():
             return ""  # blank canvas -> empty text (then Trim, PgsOcr.cs:122)
         row_any = mask.any(axis=1)
@@ -130,8 +146,9 @@ class TesseractOcr:
         engine = self._load_engine()
         from PIL import Image
 
-        # RGBA numpy canvas -> PIL image (the GetPix analog); Tesseract
-        # sees the same 25px-padded canvas the glyph backend does
+        # RGBA numpy canvas -> PIL image (the GetPix analog); no
+        # wants_mask attribute, so Tesseract sees the reference's
+        # 25px-padded RGBA canvas
         text = engine.image_to_string(
             Image.fromarray(np.ascontiguousarray(rgba), mode="RGBA"),
             lang=self._lang,

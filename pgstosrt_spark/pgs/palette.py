@@ -19,9 +19,18 @@ semantics (public Subtitle Edit source, LGPL; pinned 4.0.5 in
         b  = y1 + (cb-128) * 2.112401786
   * SetYCbCr runs unconditionally — colour updates even when the alpha
     write is rejected (:656).
+
+Memoization: the LUT is a pure function of the last PaletteInfo's
+``(size, buffer)`` (``buffer`` is immutable ``bytes``), so decoded LUTs are
+kept in a small LRU keyed on that pair and returned read-only.  Real
+streams re-send one palette across many compositions, so the cache nearly
+always hits; a lookup costs one hash of the buffer (1,280 bytes for a
+full 256-entry PDS).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 
@@ -36,6 +45,9 @@ _R_CR = 1.792741071
 _G_CR = 0.5329093286
 _G_CB = 0.2132486143
 _B_CB = 2.112401786
+
+# distinct palette buffers kept decoded (per worker process)
+_LUT_CACHE_SIZE = 64
 
 
 def ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
@@ -52,32 +64,38 @@ def ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
 
 
 def decode_palette(palette_infos: list[PaletteInfo]) -> np.ndarray:
-    """-> (256, 4) uint8 RGBA LUT.
+    """-> (256, 4) uint8 RGBA LUT, read-only and shared between calls with
+    the same last palette buffer (copy it before writing)."""
+    if not palette_infos:
+        return _palette_lut(0, b"")
+    info = palette_infos[-1]
+    return _palette_lut(info.size, info.buffer)
+
+
+@functools.lru_cache(maxsize=_LUT_CACHE_SIZE)
+def _palette_lut(size: int, buffer: bytes) -> np.ndarray:
+    """Decode one palette buffer (size 0: the all-transparent default).
 
     The per-entry loop is sequential because duplicate entry ids within one
     buffer interact through the stored alpha (<=256 iterations; the heavy
     work — YCbCr conversion — is vectorized over all touched entries).
     """
     lut = np.zeros((256, 4), dtype=np.uint8)  # transparent black default
-    ycbcr = np.zeros((256, 3), dtype=np.uint8)
-    ycbcr[:, 0] = 16
-    ycbcr[:, 1] = 128  # cb
-    ycbcr[:, 2] = 128  # cr
-    if not palette_infos:
-        return lut
-
-    info = palette_infos[-1]
-    buf = np.frombuffer(info.buffer, dtype=np.uint8, count=info.size * 5).reshape(
-        info.size, 5
-    )
-    alpha = lut[:, 3].astype(np.int64)  # working alpha store
-    for idx, yn, crn, cbn, an in buf.tolist():
-        if an >= alpha[idx]:
-            if an < 14:
-                yn, crn, cbn = 16, 128, 128
-            alpha[idx] = an
-        # SetYCbCr always runs (:656)
-        ycbcr[idx] = (yn, cbn, crn)
-    lut[:, :3] = ycbcr_to_rgb(ycbcr[:, 0], ycbcr[:, 1], ycbcr[:, 2])
-    lut[:, 3] = alpha.astype(np.uint8)
+    if size:
+        ycbcr = np.zeros((256, 3), dtype=np.uint8)
+        ycbcr[:, 0] = 16
+        ycbcr[:, 1] = 128  # cb
+        ycbcr[:, 2] = 128  # cr
+        buf = np.frombuffer(buffer, dtype=np.uint8, count=size * 5).reshape(size, 5)
+        alpha = lut[:, 3].astype(np.int64)  # working alpha store
+        for idx, yn, crn, cbn, an in buf.tolist():
+            if an >= alpha[idx]:
+                if an < 14:
+                    yn, crn, cbn = 16, 128, 128
+                alpha[idx] = an
+            # SetYCbCr always runs (:656)
+            ycbcr[idx] = (yn, cbn, crn)
+        lut[:, :3] = ycbcr_to_rgb(ycbcr[:, 0], ycbcr[:, 1], ycbcr[:, 2])
+        lut[:, 3] = alpha.astype(np.uint8)
+    lut.flags.writeable = False
     return lut

@@ -17,11 +17,19 @@ BluRaySupParserExtensions.cs:43-141):
     (:72-77) — replicated exactly, including overfilled-row behaviour;
   * degenerate inputs (no data, w/h <= 0, empty buffer) -> 1x1 transparent
     (:48-53);
-  * the decoded bitmap is blitted into a (w+50)x(h+50) canvas at (25,25)
-    (:136-140) as an OCR-quality border.
+  * RGBA path only: palette LUT gather, and the decoded bitmap is blitted
+    into a (w+50)x(h+50) canvas at (25,25) (:136-140) as an OCR-quality
+    border.  The mask path (``decode_image(..., mask=True)``) returns the
+    unpadded (h, w) bool "pixel written" mask instead — exactly the
+    canvas's ``alpha > 0``, since alpha-0 writes are skipped.
 
-The opcode walk is per-run (never per-pixel); pixel writes are numpy slice
-assignments + one LUT gather.
+Deliberate divergence: an object larger than ``MAX_CANVAS_PIXELS`` raises
+DecodeError before anything is allocated.  The reference would try to
+allocate it (a 65535x65535 ODS header asks for 16 GiB of RGBA) and fail
+less gracefully.
+
+The opcode walk is per-run (never per-pixel); pixel writes are one numpy
+scatter, plus one LUT gather on the RGBA path.
 """
 
 from __future__ import annotations
@@ -31,7 +39,25 @@ import numpy as np
 from .model import DecodeError, OdsData, PaletteInfo, PcsObject
 from .palette import decode_palette
 
-__all__ = ["decode_rle_runs", "decode_image", "pad_image"]
+__all__ = [
+    "MAX_CANVAS_PIXELS",
+    "blank_canvas",
+    "decode_rle_runs",
+    "decode_image",
+    "pad_image",
+]
+
+# pixel budget for one decoded canvas: the UHD video plane (3840x2160), the
+# largest graphics plane a Blu-ray PGS stream can be composed onto
+MAX_CANVAS_PIXELS = 3840 * 2160
+
+
+def _check_canvas(width: int, height: int) -> None:
+    """Raise DecodeError when a width x height canvas exceeds the budget."""
+    if width * height > MAX_CANVAS_PIXELS:
+        raise DecodeError(
+            f"canvas {width}x{height} exceeds {MAX_CANVAS_PIXELS} pixels"
+        )
 
 
 def decode_rle_runs(
@@ -43,7 +69,8 @@ def decode_rle_runs(
     given, writes of colours with alpha==0 are skipped while the cursor
     still advances — exactly PutPixel (:149-155), so overlapping writes
     keep earlier opaque pixels.  Raises DecodeError where the reference
-    would throw IndexOutOfRangeException (buffer overrun).
+    would throw IndexOutOfRangeException (buffer overrun), and before
+    allocating when the image exceeds ``MAX_CANVAS_PIXELS``.
 
     Physical shape: every escape starts with a 0x00 byte, so the Python
     loop steps per ESCAPE (zero positions precomputed with numpy) and a
@@ -54,6 +81,7 @@ def decode_rle_runs(
     handles the rare overlapping-cursor case (overfilled row + EOL
     snap-back).
     """
+    _check_canvas(width, height)
     total = width * height
     p = 0  # pixel cursor (num1)
     col = 0  # column counter (num2)
@@ -205,23 +233,37 @@ def decode_image(
     fragments: list[OdsData],
     palettes: list[PaletteInfo],
     pad: bool = True,
+    mask: bool = False,
 ) -> np.ndarray:
-    """One composition object -> (h+50, w+50, 4) uint8 RGBA.
+    """One composition object -> (h+50, w+50, 4) uint8 RGBA (unpadded
+    (h, w, 4) with ``pad=False``), or with ``mask=True`` the unpadded (h, w)
+    bool mask of opaque pixels.
 
     DecodeImage (BluRaySupParserExtensions.cs:43-141); fragments must be
     pre-reassembled (fragment[0] holds the full buffer).
     """
     if pcs_obj is None or not fragments:
-        return np.zeros((1, 1, 4), dtype=np.uint8)
+        return blank_canvas(mask=mask)
     width, height = fragments[0].width, fragments[0].height
     if width <= 0 or height <= 0 or len(fragments[0].data) == 0:
-        return np.zeros((1, 1, 4), dtype=np.uint8)
+        return blank_canvas(mask=mask)
 
     lut = decode_palette(palettes)
     idx = decode_rle_runs(fragments[0].data, width, height, alpha_lut=lut[:, 3])
+    if mask:
+        return (idx >= 0).reshape(height, width)
 
     rgba = np.zeros((height * width, 4), dtype=np.uint8)
     written = idx >= 0
     rgba[written] = lut[idx[written].astype(np.int32)]
     rgba = rgba.reshape(height, width, 4)
     return pad_image(rgba) if pad else rgba
+
+
+def blank_canvas(height: int = 1, width: int = 1, mask: bool = False) -> np.ndarray:
+    """Fully transparent (height, width, 4) RGBA canvas, or its (height,
+    width) bool mask."""
+    _check_canvas(width, height)
+    if mask:
+        return np.zeros((height, width), dtype=bool)
+    return np.zeros((height, width, 4), dtype=np.uint8)

@@ -18,8 +18,10 @@ Scale notes (100 TB / 10^12 docs):
   * the only required shuffle is the final groupBy(doc_id) of *small*
     string rows (payload bytes never shuffle in fused mode);
   * ``mode='two_phase'`` adds one rebalance shuffle of parsed compositions
-    (RLE-compressed, still far smaller than raw payloads) so skewed
-    payloads fan out before the expensive decode+OCR (north_rule skew);
+    so skewed payloads fan out before the expensive decode+OCR (north_rule
+    skew).  The shuffled rows are pickled ``PcsData`` and are *not* smaller
+    than the payloads: 22.3 MB pickled vs 20.5 MB raw for the 17,627
+    compositions of 3,000 sf0.1 docs;
   * ``balance=True`` round-robins media rows before the fused kernel when
     the *input* partitioning is skewed (many payloads in few files).
 """

@@ -64,6 +64,20 @@ def test_query_matches_oracle(spark, duck, name):
         )
 
 
+def test_dataset_manifest_oracle_types_match_spark(spark, duck):
+    """The DuckDB twin's column types equal the Spark query's: DuckDB's
+    sum(BIGINT) is HUGEINT unless cast back, where Spark's sum(long) is a
+    bigint (value parity alone hides this, _canon casts both to int64)."""
+    to_duck = {"string": "VARCHAR", "bigint": "BIGINT", "double": "DOUBLE"}
+    spark_types = {
+        f.name: to_duck[f.dataType.simpleString()]
+        for f in entrymod.queries()["dataset_manifest"](spark, SF_DIR).schema
+    }
+    sql = entrymod.oracle_sql()["dataset_manifest"]
+    duck_types = {row[0]: row[1] for row in duck.execute(f"DESCRIBE {sql}").fetchall()}
+    assert duck_types == spark_types
+
+
 def test_all_queries_have_oracle_or_are_documented():
     qs = set(entrymod.queries().keys())
     oracles = set(entrymod.oracle_sql().keys())

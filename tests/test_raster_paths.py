@@ -1,0 +1,272 @@
+"""Rasterize output forms, the palette LUT memo and the canvas pixel budget.
+
+The decode path hands an OCR backend either the reference's padded RGBA
+canvas or, when the backend sets ``wants_mask``, the unpadded opacity mask
+(pgs/compose.py).  These tests pin that both forms give the same text, that
+backends without the attribute still get RGBA, that the per-layer entry
+points a tracer wraps are still called once per composition, and that no
+object or union canvas beyond ``MAX_CANVAS_PIXELS`` is ever allocated.
+"""
+
+from __future__ import annotations
+
+import pickle
+import struct
+import tracemalloc
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from pgstosrt_spark.fixtures import encoder as enc
+from pgstosrt_spark.fixtures.corpus import N_VARIANTS, _media_payload
+from pgstosrt_spark.kernels import make_ocr_kernel
+from pgstosrt_spark.pgs import decode, rle
+from pgstosrt_spark.pgs.compose import rasterize
+from pgstosrt_spark.pgs.decode import (
+    decode_media_payload,
+    decode_to_display_sets,
+    display_sets_to_cues,
+)
+from pgstosrt_spark.pgs.model import (
+    SEG_ODS,
+    DecodeError,
+    OdsData,
+    PaletteInfo,
+    PcsData,
+    PcsObject,
+)
+from pgstosrt_spark.pgs.ocr import GlyphAtlasOcr
+from pgstosrt_spark.pgs.palette import decode_palette
+from pgstosrt_spark.pgs.rle import MAX_CANVAS_PIXELS, decode_rle_runs
+
+CUES = ["THE QUICK BROWN FOX", "JUMPS OVER THE LAZY", "DOG AGAIN TODAY"]
+
+
+class RecordingBackend:
+    """A backend without ``wants_mask``: records every canvas it gets."""
+
+    def __init__(self) -> None:
+        self.canvases: list[np.ndarray] = []
+
+    def recognize(self, rgba: np.ndarray) -> str:
+        self.canvases.append(rgba)
+        return GlyphAtlasOcr().recognize(rgba)
+
+
+# ------------------------------------------------------------- mask == RGBA
+
+
+@pytest.mark.parametrize("variant", range(N_VARIANTS))
+@pytest.mark.parametrize("fix", [False, True])
+def test_mask_and_rgba_recognize_alike(variant, fix):
+    ocr = GlyphAtlasOcr()
+    sets = decode_to_display_sets(_media_payload(CUES, variant))
+    assert sets
+    for pcs in sets:
+        m = rasterize(pcs, multi_object_opacity_fix=fix, mask=True)
+        rgba = rasterize(pcs, multi_object_opacity_fix=fix)
+        assert m.dtype == bool and m.ndim == 2
+        assert ocr.recognize(m) == ocr.recognize(rgba)
+        # the mask is the canvas's alpha > 0 without the 25 px pad
+        alpha = rgba[:, :, 3] > 0
+        if alpha.shape != m.shape:
+            alpha = alpha[25:-25, 25:-25]
+        assert np.array_equal(alpha, m)
+
+
+@pytest.mark.parametrize("variant", range(N_VARIANTS))
+def test_backend_without_attribute_gets_padded_rgba(variant):
+    sets = decode_to_display_sets(_media_payload(CUES, variant))
+    single = [p for p in sets if p.pcs_objects and len(p.pcs_objects) == 1]
+    assert single
+    expect = [
+        (p.bitmap_objects[0][0].height + 50, p.bitmap_objects[0][0].width + 50, 4)
+        for p in single
+    ]
+
+    inline = RecordingBackend()
+    cues = display_sets_to_cues(sets, backend=inline)
+    assert [c.text for c in cues] == [
+        c.text for c in display_sets_to_cues(sets, backend=GlyphAtlasOcr())
+    ]
+
+    two_phase = RecordingBackend()
+    batch = pd.DataFrame(
+        {
+            "doc_id": ["d"] * len(sets),
+            "offset": [0] * len(sets),
+            "seq": list(range(1, len(sets) + 1)),
+            "kind": ["comp"] * len(sets),
+            "media_ref": ["m"] * len(sets),
+            "pcs": [pickle.dumps(p) for p in sets],
+            "info": [""] * len(sets),
+        }
+    )
+    (out,) = make_ocr_kernel(backend=two_phase)(iter([batch]))
+    assert out["kind"].tolist() == ["cue"] * len(sets)
+
+    for backend in (inline, two_phase):
+        assert all(c.dtype == np.uint8 and c.ndim == 3 for c in backend.canvases)
+        shapes = [
+            c.shape
+            for c, p in zip(backend.canvases, sets)
+            if p.pcs_objects and len(p.pcs_objects) == 1
+        ]
+        assert shapes == expect
+
+
+def test_glyph_backend_asks_for_a_mask():
+    assert GlyphAtlasOcr.wants_mask is True
+    seen = []
+
+    class Spy(GlyphAtlasOcr):
+        def recognize(self, img):
+            seen.append(img)
+            return super().recognize(img)
+
+    payload = enc.build_sup_from_cues([("MASKED", 90_000, 180_000)])
+    assert [t.split("\n", 1)[1] for _, t in decode_media_payload(payload, backend=Spy())] == [
+        "MASKED"
+    ]
+    assert len(seen) == 1 and seen[0].dtype == bool and seen[0].ndim == 2
+
+
+# ------------------------------------------------------------- palette memo
+
+
+def test_palette_lut_is_read_only():
+    lut = decode_palette([PaletteInfo(size=1, buffer=bytes([1, 235, 128, 128, 255]))])
+    with pytest.raises(ValueError):
+        lut[1, 0] = 0
+    with pytest.raises(ValueError):
+        decode_palette([])[0, 3] = 255
+
+
+def test_palette_lut_keyed_on_buffer_contents():
+    buf = bytes([1, 235, 128, 128, 255, 2, 81, 90, 240, 255])
+    a = decode_palette([PaletteInfo(size=2, buffer=buf)])
+    b = decode_palette([PaletteInfo(size=2, buffer=bytes(bytearray(buf)))])
+    assert np.array_equal(a, b)
+    # only the last info matters (:627): an earlier one does not change it
+    c = decode_palette(
+        [PaletteInfo(size=1, buffer=bytes([1, 16, 128, 128, 0])), PaletteInfo(size=2, buffer=buf)]
+    )
+    assert np.array_equal(a, c)
+    other = bytes([1, 235, 128, 128, 255, 2, 81, 90, 240, 128])
+    d = decode_palette([PaletteInfo(size=2, buffer=other)])
+    assert not np.array_equal(a, d)
+    assert d[2, 3] == 128 and a[2, 3] == 255
+    # size is part of the key: the first entry alone leaves entry 2 unset
+    e = decode_palette([PaletteInfo(size=1, buffer=buf)])
+    assert tuple(e[2]) == (0, 0, 0, 0)
+
+
+# ----------------------------------------------------------- tracer contract
+
+
+def test_layer_entry_points_called_once_per_composition(monkeypatch):
+    """A per-layer tracer wraps these module attributes; each must still be
+    reached once per composition, and rasterize must return an ndarray."""
+    calls = {"rasterize": 0, "rle": 0, "palette": 0, "ocr": 0}
+
+    def counting(key, fn, check=None):
+        def wrapper(*args, **kwargs):
+            calls[key] += 1
+            out = fn(*args, **kwargs)
+            if check:
+                check(out)
+            return out
+
+        return wrapper
+
+    def is_ndarray(out):
+        assert isinstance(out, np.ndarray)
+
+    monkeypatch.setattr(decode, "rasterize", counting("rasterize", decode.rasterize, is_ndarray))
+    monkeypatch.setattr(rle, "decode_rle_runs", counting("rle", rle.decode_rle_runs))
+    monkeypatch.setattr(rle, "decode_palette", counting("palette", rle.decode_palette))
+    monkeypatch.setattr(
+        GlyphAtlasOcr, "recognize", counting("ocr", GlyphAtlasOcr.recognize)
+    )
+    cues = [(f"LINE {i}", 90_000 * (2 * i + 1), 90_000 * (2 * i + 2)) for i in range(5)]
+    got = decode_media_payload(enc.build_sup_from_cues(cues))
+    assert len(got) == 5
+    assert calls == {"rasterize": 5, "rle": 5, "palette": 5, "ocr": 5}
+
+
+# ------------------------------------------------------- canvas pixel budget
+
+
+def _plant_huge_ods(display_set: bytes) -> bytes:
+    """Rewrite the width/height of the first ODS in a .sup display set to
+    65535x65535 (segment payload offsets 7 and 9)."""
+    out = bytearray(display_set)
+    pos = 0
+    while pos + 13 <= len(out):
+        typ = out[pos + 10]
+        (size,) = struct.unpack_from(">H", out, pos + 11)
+        if typ == SEG_ODS:
+            struct.pack_into(">HH", out, pos + 13 + 7, 65535, 65535)
+            return bytes(out)
+        pos += 13 + size
+    raise AssertionError("no ODS segment")
+
+
+def test_rle_budget_raises_before_allocating():
+    tracemalloc.start()
+    try:
+        with pytest.raises(DecodeError):
+            decode_rle_runs(b"\x00\x00", 65535, 65535)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+    # the budget itself still decodes
+    side = int(MAX_CANVAS_PIXELS**0.5)
+    assert decode_rle_runs(b"\x00\x00", side, 1).shape == (side,)
+
+
+def test_planted_huge_ods_drops_only_its_composition():
+    ones = enc.build_sup_from_cues([("ONE", 90_000, 180_000)])
+    two = enc.build_sup_from_cues([("TWO", 270_000, 360_000)])
+    three = enc.build_sup_from_cues([("THREE", 450_000, 540_000)])
+    payload = ones + _plant_huge_ods(two) + three
+    tracemalloc.start()
+    try:
+        got = decode_media_payload(payload)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert [t.split("\n", 1)[1] for _, t in got] == ["ONE", "THREE"]
+    assert [s for s, _ in got] == [1, 3]
+    assert peak < 64 << 20
+
+
+@pytest.mark.parametrize("mask", [False, True])
+def test_union_canvas_budget(mask):
+    frag = OdsData(object_id=0, object_version=0, is_first=True, width=4, height=4, data=b"\x01" * 16)
+    far = OdsData(object_id=1, object_version=0, is_first=True, width=4, height=4, data=b"\x01" * 16)
+    pcs = PcsData(
+        comp_num=0,
+        state=0,
+        palette_update=False,
+        start=0,
+        end=90_000,
+        width=1920,
+        height=1080,
+        fps_type=0,
+        palette_id=0,
+        pcs_objects=[PcsObject(0, 0, False, 0, 0), PcsObject(1, 0, False, 65000, 65000)],
+        bitmap_objects=[[frag], [far]],
+        palette_infos=[PaletteInfo(size=1, buffer=bytes([1, 235, 128, 128, 255]))],
+    )
+    tracemalloc.start()
+    try:
+        for fix in (False, True):
+            with pytest.raises(DecodeError):
+                rasterize(pcs, multi_object_opacity_fix=fix, mask=mask)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
