@@ -1354,15 +1354,18 @@ def oracle_sql() -> dict[str, str]:
             FROM p
         """,
         "pii_scrub": f"""
+            WITH m AS (SELECT doc_id, text,
+                              regexp_replace(text, '{PII_EMAIL_RE}',
+                                             '<EMAIL>', 'g') AS no_emails
+                       FROM documents)
             SELECT doc_id,
-                   md5(regexp_replace(
-                       regexp_replace(text, '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
-                       '{PII_PHONE_RE}', '<PHONE>', 'g')) AS masked_fp,
+                   md5(regexp_replace(no_emails, '{PII_PHONE_RE}',
+                                      '<PHONE>', 'g')) AS masked_fp,
                    CAST(len(regexp_extract_all(text, '{PII_EMAIL_RE}'))
                         AS BIGINT) AS n_emails,
-                   CAST(len(regexp_extract_all(text, '{PII_PHONE_RE}'))
+                   CAST(len(regexp_extract_all(no_emails, '{PII_PHONE_RE}'))
                         AS BIGINT) AS n_phones
-            FROM documents
+            FROM m
         """,
         "dataset_manifest": f"""
             WITH t AS (SELECT source, text, {_TOKS} AS toks FROM documents),

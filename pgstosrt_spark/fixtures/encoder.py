@@ -25,6 +25,7 @@ __all__ = [
     "build_clear_set",
     "build_sup",
     "build_sup_from_cues",
+    "set_first_ods_size",
     "CHARSET",
 ]
 
@@ -299,6 +300,21 @@ def build_sup_from_cues(
 def build_sup(segments: list[bytes]) -> bytes:
     """Concatenate pre-built display sets / raw segment bytes."""
     return b"".join(segments)
+
+
+def set_first_ods_size(stream: bytes, width: int, height: int) -> bytes:
+    """Rewrite the width/height of the first ODS in a .sup stream (segment
+    payload offsets 7 and 9) — a hostile-input fixture: the RLE data stays,
+    only the declared canvas changes (e.g. 65535x65535)."""
+    out = bytearray(stream)
+    pos = 0
+    while pos + 13 <= len(out):
+        (size,) = struct.unpack_from(">H", out, pos + 11)
+        if out[pos + 10] == SEG_ODS:
+            struct.pack_into(">HH", out, pos + 13 + 7, width, height)
+            return bytes(out)
+        pos += 13 + size
+    raise ValueError("no ODS segment")
 
 
 # ---------------------------------------------------------------- EBML (MKV)

@@ -298,11 +298,13 @@ def pack_sequences(
     ~budget-token concatenation groups for an LLM data loader).
 
     Contiguous first-fit within each ``source`` shard in doc_id order:
-    pack_id = floor(exclusive-prefix-sum(n_tokens) / budget), so a pack
-    closes once the running total crosses the budget (the doc that
-    crosses it stays in the pack — standard greedy concat-and-cut
-    semantics; oversized docs occupy packs alone).  Deterministic and
-    order-stable, so re-runs produce identical packs.
+    pack_id = floor(exclusive-prefix-sum(n_tokens) / budget): a doc joins
+    the pack its *starting* offset falls in (prefix-quotient grouping), so
+    a pack closes once the running total crosses the budget and the doc
+    that crosses it stays in the pack.  An oversized doc therefore shares
+    a pack with the docs before it; it only pushes the next doc's pack id
+    forward (ids can skip, e.g. 1 -> 4).  Deterministic and order-stable,
+    so re-runs produce identical packs.
 
     Scale note: packing is inherently sequential *within* a shard — the
     prefix sum is the whole semantics — so the parallel unit must be the
@@ -355,16 +357,16 @@ def pii_scrub(df: DataFrame, col: str = "text") -> DataFrame:
     for free.  Patterns live in the RE2-and-Java-common regex subset so
     the DuckDB twin executes the identical automaton.
     """
-    masked = F.regexp_replace(
-        F.regexp_replace(F.col(col), PII_EMAIL_RE, "<EMAIL>"),
-        PII_PHONE_RE,
-        "<PHONE>",
-    )
+    # phones are counted on the email-masked text, the text they are
+    # masked in: digits inside an address ('555-123-4567@x.com') are
+    # already part of an <EMAIL> and must not count as a phone too
+    no_emails = F.regexp_replace(F.col(col), PII_EMAIL_RE, "<EMAIL>")
+    masked = F.regexp_replace(no_emails, PII_PHONE_RE, "<PHONE>")
     n_emails = F.size(
-        F.expr(f"regexp_extract_all({col}, '{PII_EMAIL_RE}', 0)")
+        F.regexp_extract_all(F.col(col), F.lit(PII_EMAIL_RE), F.lit(0))
     ).cast("long")
     n_phones = F.size(
-        F.expr(f"regexp_extract_all({col}, '{PII_PHONE_RE}', 0)")
+        F.regexp_extract_all(no_emails, F.lit(PII_PHONE_RE), F.lit(0))
     ).cast("long")
     return df.select(
         "doc_id",

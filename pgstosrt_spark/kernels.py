@@ -20,14 +20,25 @@ Two physical strategies (pipeline.py picks):
 Error policy: the reference silently drops failing items
 (PgsOcr.cs:103-106); these kernels never stay silent — every failure emits
 a ``kind='_error'`` row and every payload a ``kind='_metric'`` row (JSON
-counters), which the pipeline routes to a metrics side-channel.
+counters), which the pipeline routes to a metrics side-channel.  The fused
+kernel emits one ``_error`` row per composition its decode drops, with that
+composition's ``seq``, as the two-phase OCR kernel does.
+
+Every kernel body first calls :func:`_stamp_checked_zip_invalidation`:
+pyspark's worker calls ``importlib.invalidate_caches()`` before each task,
+which on CPython < 3.13 re-reads every zipimported archive (``pyspark.zip``,
+``--py-files``) — a fixed ~0.25 CPU-s per task that the helper removes.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import os
 import pickle
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -46,6 +57,49 @@ COMP_SCHEMA = (
 )
 
 
+def _stamp_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip re-reading unchanged zips.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (``worker_util.setup_spark_files``).  CPython before 3.13
+    answers that eagerly: each ``zipimporter`` re-reads its archive's whole
+    central directory (3.11.7 and 3.12.1 do; 3.13.0 only pops the directory
+    cache and reads lazily).  A worker holds ~16 importers over
+    ``pyspark.zip`` (1,328 entries), so every task paid ~0.25 CPU-s.
+
+    Once per process this wraps the method: an importer re-reads its
+    archive only when the archive's ``os.stat`` stamp ``(st_mtime_ns,
+    st_size, st_ino)`` differs from the stamp taken when *that importer*
+    last read it, so a zip rewritten or replaced mid-job (``--py-files``)
+    is still re-read.  If the stat fails, the original method runs.
+    Idempotent; a no-op on Python >= 3.13.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_stamp_checked", False):
+        return
+
+    @functools.wraps(original)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            self.__dict__.pop("_dir_stamp", None)
+            return original(self)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        if self.__dict__.get("_dir_stamp") != stamp:
+            original(self)
+            self._dir_stamp = stamp
+
+    invalidate_caches._stamp_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def _error_text(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
+
+
 def make_fused_kernel(
     backend: OcrBackend | None = None,
     skip_merge: bool = False,
@@ -57,6 +111,7 @@ def make_fused_kernel(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
+        _stamp_checked_zip_invalidation()
         tc = TaskContext.get()
         part = tc.partitionId() if tc is not None else -1
         ocr = backend or GlyphAtlasOcr()
@@ -84,6 +139,7 @@ def make_fused_kernel(
                 # misaligned (that would kill the task instead of emitting
                 # an _error row)
                 out_rows: list[tuple[int, str, str]] = []
+                dropped: list = []
                 try:
                     cues = decode_media_payload(
                         bytes(payload),
@@ -91,9 +147,12 @@ def make_fused_kernel(
                         skip_merge=skip_merge,
                         force_merge_all=force_merge_all,
                         multi_object_opacity_fix=multi_object_opacity_fix,
+                        errors=dropped,
                     )
                     for seq, text in cues:
                         out_rows.append((seq, "cue", text))
+                    for seq, exc in dropped:
+                        out_rows.append((seq, "_error", _error_text(exc)))
                     out_rows.append(
                         (
                             0,
@@ -116,7 +175,7 @@ def make_fused_kernel(
                         )
                     )
                 except Exception as exc:  # never silent (vs PgsOcr.cs:103-106)
-                    out_rows = [(0, "_error", f"{type(exc).__name__}: {exc}")]
+                    out_rows = [(0, "_error", _error_text(exc))]
                 for seq, kind, text in out_rows:
                     c_doc.append(doc_id)
                     c_off.append(offset)
@@ -149,6 +208,7 @@ def make_parse_kernel(skip_merge: bool = False, force_merge_all: bool = False):
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
+        _stamp_checked_zip_invalidation()
         tc = TaskContext.get()
         part = tc.partitionId() if tc is not None else -1
         for pdf in batches:
@@ -201,7 +261,7 @@ def make_parse_kernel(skip_merge: bool = False, force_merge_all: bool = False):
                             "kind": "_error",
                             "media_ref": media_ref,
                             "pcs": None,
-                            "info": f"{type(exc).__name__}: {exc}",
+                            "info": _error_text(exc),
                         }
                     )
             yield pd.DataFrame(
@@ -227,6 +287,7 @@ def make_ocr_kernel(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .pgs.compose import rasterize
 
+        _stamp_checked_zip_invalidation()
         ocr = backend or GlyphAtlasOcr()
         mask = wants_mask(ocr)
         for pdf in batches:
@@ -258,7 +319,7 @@ def make_ocr_kernel(
                         text = ocr.recognize(img)
                         kind, out = "cue", cue_text(pcs.start, pcs.end, text)
                     except Exception as exc:
-                        kind, out = "_error", f"{type(exc).__name__}: {exc}"
+                        kind, out = "_error", _error_text(exc)
                 c_doc.append(doc_id)
                 c_off.append(int(offset))
                 c_seq.append(int(seq))

@@ -83,14 +83,16 @@ def display_sets_to_cues(
     sets: list[PcsData],
     backend: OcrBackend | None = None,
     multi_object_opacity_fix: bool = False,
+    errors: list[tuple[int, DecodeError]] | None = None,
 ) -> list[Cue]:
     """Rasterize + OCR each display set, in order (PgsOcr.cs:80-110).
 
     The reference drops items whose decode/OCR throws (PgsOcr.cs:103-106);
-    we do the same on the output sequence but surface the count via the
-    returned cues' ``seq`` gaps being *absent* — kernels additionally emit
-    metric rows (never silent).  A backend with ``wants_mask`` gets the
-    unpadded opacity mask instead of the RGBA canvas (compose.py).
+    we do the same on the output sequence (the dropped ``seq`` is absent),
+    and append ``(seq, exc)`` to ``errors`` when it is given, so the fused
+    kernel can emit an ``_error`` row per dropped composition.  A backend
+    with ``wants_mask`` gets the unpadded opacity mask instead of the RGBA
+    canvas (compose.py).
     """
     backend = backend or default_backend()
     mask = wants_mask(backend)
@@ -101,7 +103,9 @@ def display_sets_to_cues(
                 pcs, multi_object_opacity_fix=multi_object_opacity_fix, mask=mask
             )
             text = backend.recognize(img)
-        except DecodeError:
+        except DecodeError as exc:
+            if errors is not None:
+                errors.append((i + 1, exc))
             continue  # reference: log + drop (PgsOcr.cs:103-106)
         cues.append(Cue(seq=i + 1, start=pcs.start, end=pcs.end, text=text))
     return cues
@@ -113,12 +117,14 @@ def decode_media_payload(
     skip_merge: bool = False,
     force_merge_all: bool = False,
     multi_object_opacity_fix: bool = False,
+    errors: list[tuple[int, DecodeError]] | None = None,
 ) -> list[tuple[int, str]]:
     """Payload -> [(seq, cue_text)] where cue_text embeds the timecodes.
 
     This is the per-media-span contract of the engine: each media span is
     replaced by one 'cue' span per merged composition (FIXTURES.md §2).
+    Dropped compositions go to ``errors`` (see display_sets_to_cues).
     """
     sets = decode_to_display_sets(payload, skip_merge, force_merge_all)
-    cues = display_sets_to_cues(sets, backend, multi_object_opacity_fix)
+    cues = display_sets_to_cues(sets, backend, multi_object_opacity_fix, errors)
     return [(c.seq, cue_text(c.start, c.end, c.text)) for c in cues]

@@ -43,6 +43,11 @@ def get_spark(
         # knob — no shuffle, unlike repartition, whose round-robin mode
         # local-sorts every row including multi-KB payload bytes).  At
         # production scale input splits >> 4x slots, so this is a no-op.
+        # Price: each extra Python task costs the residual fixed overhead,
+        # ~0.08 CPU-s on a 4-core VM (slope of trivial mapInPandas jobs,
+        # 16 vs 64 tasks).  That holds with the kernels' stamp-checked zip
+        # invalidation (kernels.py); without it pyspark re-reads
+        # pyspark.zip on every task and a task costs ~0.25 CPU-s.
         .config("spark.sql.files.minPartitionNum", str(4 * cpus))
     )
     if extra_conf:

@@ -99,3 +99,20 @@ def test_entry_smoke(spark):
     rows = df.limit(5000).collect()
     assert len(rows) > 0
     assert {"doc_id", "pos", "kind", "text", "media_ref", "offset"} <= set(df.columns)
+
+
+def test_pii_scrub_counts_phones_on_email_masked_text(spark):
+    """Digits inside an email address are part of the <EMAIL>, not a
+    phone, in both the Spark query and its DuckDB twin."""
+    import hashlib
+
+    from pgstosrt_spark.functions.text import pii_scrub
+
+    text = "555-123-4567@x.com"
+    want = (1, hashlib.md5(b"<EMAIL>").hexdigest(), 1, 0)
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    [row] = pii_scrub(df).collect()
+    assert tuple(row) == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT 1::BIGINT AS doc_id, ? AS text", [text])
+    assert con.execute(entrymod.oracle_sql()["pii_scrub"]).fetchall() == [want]

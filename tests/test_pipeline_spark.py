@@ -148,6 +148,35 @@ def test_all_failed_doc_keeps_shape(spark):
     assert side.filter(side.kind == "_error").count() == 1
 
 
+def test_fused_job_reports_planted_huge_ods(spark, small_docs):
+    """A 65535x65535 ODS inside a Spark job: the job completes, its doc
+    keeps the other cues, the dropped composition is exactly one
+    ``_error`` row in the side channel (as in two-phase), and every other
+    doc still matches the oracle."""
+    docs, rows = small_docs
+    planted = (
+        enc.build_sup_from_cues([("ONE", 90_000, 180_000)])
+        + enc.set_first_ods_size(enc.build_sup_from_cues([("TWO", 270_000, 360_000)]), 65535, 65535)
+        + enc.build_sup_from_cues([("THREE", 450_000, 540_000)])
+    )
+    span = {"kind": "media", "text": base64.b64encode(planted).decode(), "media_ref": "pgs://huge/0", "offset": 0}
+    docs = docs.unionByName(
+        spark.createDataFrame([{"doc_id": "huge", "spans": [span]}], schema=DOCUMENTS_SCHEMA)
+    )
+
+    got = _collect_spans(extract(docs))
+    assert [t.split("\n", 1)[1] for _k, t, _r in got.pop("huge")] == ["ONE", "THREE"]
+    assert got == _expected(rows)
+
+    def errors(mode):
+        _cues, side = split_side_channel(extract_cue_rows(docs, mode=mode))
+        return [tuple(r) for r in side.filter(side.kind == "_error").collect()]
+
+    [err] = errors("fused")
+    assert err[:4] == ("huge", 0, 2, "_error") and err[4].startswith("DecodeError: ")
+    assert errors("two_phase") == [err]
+
+
 def test_media_only_and_text_only_docs(spark):
     payload = base64.b64encode(enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])).decode()
     docs = spark.createDataFrame(

@@ -11,7 +11,6 @@ object or union canvas beyond ``MAX_CANVAS_PIXELS`` is ever allocated.
 from __future__ import annotations
 
 import pickle
-import struct
 import tracemalloc
 
 import numpy as np
@@ -20,7 +19,7 @@ import pytest
 
 from pgstosrt_spark.fixtures import encoder as enc
 from pgstosrt_spark.fixtures.corpus import N_VARIANTS, _media_payload
-from pgstosrt_spark.kernels import make_ocr_kernel
+from pgstosrt_spark.kernels import make_fused_kernel, make_ocr_kernel, make_parse_kernel
 from pgstosrt_spark.pgs import decode, rle
 from pgstosrt_spark.pgs.compose import rasterize
 from pgstosrt_spark.pgs.decode import (
@@ -29,7 +28,6 @@ from pgstosrt_spark.pgs.decode import (
     display_sets_to_cues,
 )
 from pgstosrt_spark.pgs.model import (
-    SEG_ODS,
     DecodeError,
     OdsData,
     PaletteInfo,
@@ -198,21 +196,6 @@ def test_layer_entry_points_called_once_per_composition(monkeypatch):
 # ------------------------------------------------------- canvas pixel budget
 
 
-def _plant_huge_ods(display_set: bytes) -> bytes:
-    """Rewrite the width/height of the first ODS in a .sup display set to
-    65535x65535 (segment payload offsets 7 and 9)."""
-    out = bytearray(display_set)
-    pos = 0
-    while pos + 13 <= len(out):
-        typ = out[pos + 10]
-        (size,) = struct.unpack_from(">H", out, pos + 11)
-        if typ == SEG_ODS:
-            struct.pack_into(">HH", out, pos + 13 + 7, 65535, 65535)
-            return bytes(out)
-        pos += 13 + size
-    raise AssertionError("no ODS segment")
-
-
 def test_rle_budget_raises_before_allocating():
     tracemalloc.start()
     try:
@@ -227,11 +210,16 @@ def test_rle_budget_raises_before_allocating():
     assert decode_rle_runs(b"\x00\x00", side, 1).shape == (side,)
 
 
+def _huge_ods_payload() -> bytes:
+    return (
+        enc.build_sup_from_cues([("ONE", 90_000, 180_000)])
+        + enc.set_first_ods_size(enc.build_sup_from_cues([("TWO", 270_000, 360_000)]), 65535, 65535)
+        + enc.build_sup_from_cues([("THREE", 450_000, 540_000)])
+    )
+
+
 def test_planted_huge_ods_drops_only_its_composition():
-    ones = enc.build_sup_from_cues([("ONE", 90_000, 180_000)])
-    two = enc.build_sup_from_cues([("TWO", 270_000, 360_000)])
-    three = enc.build_sup_from_cues([("THREE", 450_000, 540_000)])
-    payload = ones + _plant_huge_ods(two) + three
+    payload = _huge_ods_payload()
     tracemalloc.start()
     try:
         got = decode_media_payload(payload)
@@ -241,6 +229,35 @@ def test_planted_huge_ods_drops_only_its_composition():
     assert [t.split("\n", 1)[1] for _, t in got] == ["ONE", "THREE"]
     assert [s for s, _ in got] == [1, 3]
     assert peak < 64 << 20
+
+
+def test_dropped_composition_is_reported_to_errors():
+    payload = _huge_ods_payload()
+    errors: list = []
+    assert decode_media_payload(payload, errors=errors) == decode_media_payload(payload)
+    assert [(seq, type(exc)) for seq, exc in errors] == [(2, DecodeError)]
+
+
+def test_fused_kernel_error_rows_match_two_phase():
+    """The fused kernel emits the same ``_error`` row (seq = composition
+    number, ``DecodeError: ...``) as parse + OCR do for a composition the
+    decode drops, next to the same cues (kernels run in-process)."""
+    batch = pd.DataFrame(
+        {"doc_id": ["d"], "offset": [3], "media_ref": ["m"], "payload": [_huge_ods_payload()]}
+    )
+    (fused,) = make_fused_kernel()(iter([batch]))
+    (comps,) = make_parse_kernel()(iter([batch]))
+    (two_phase,) = make_ocr_kernel()(iter([comps]))
+
+    def rows(df, kind):
+        return sorted(map(tuple, df[df["kind"] == kind].itertuples(index=False)))
+
+    assert rows(fused, "cue") == rows(two_phase, "cue")
+    assert len(rows(fused, "cue")) == 2
+    (err,) = rows(fused, "_error")
+    assert rows(two_phase, "_error") == [err]
+    assert err[:3] == ("d", 3, 2) and err[4].startswith("DecodeError: ")
+    assert fused["kind"].tolist().count("_metric") == 1
 
 
 @pytest.mark.parametrize("mask", [False, True])
