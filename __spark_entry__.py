@@ -429,8 +429,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunks": docs_q(tx.chunk_documents),
         # tokenizer-training vocabulary build (global top-k tokens)
         "vocab_top_tokens": docs_q(tx.vocab_top_tokens),
-        # benchmark decontamination: broadcast the held-out shingle set,
-        # probe side never shuffles (functions/text.py:contamination_check)
+        # benchmark decontamination: the held-out shingle set is broadcast
+        # when it fits autoBroadcastJoinThreshold (no forced hint), so the
+        # probe side does not shuffle (functions/text.py:contamination_check)
         "contamination_check": docs_q(tx.contamination_check),
         # token-budget sequence packing, shard-parallel by source
         "pack_sequences": docs_q(tx.pack_sequences),

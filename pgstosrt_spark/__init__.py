@@ -16,8 +16,8 @@ Architecture (Spark-first):
                      against the reference semantics cited per function.
   * ``kernels.py`` — Arrow-vectorized ``mapInPandas`` kernels wrapping the
                      core (never per-row Python UDFs).
-  * ``pipeline.py``— the DataFrame plan: explode -> filter -> kernel ->
-                     re-merge, one shuffle on doc_id.
+  * ``pipeline.py``— the DataFrame plan: explode -> kernel (text passes
+                     through) -> fold, one shuffle on doc_id.
   * ``functions/`` — training-data ops (dedup, language-ID, quality, tokens,
                      fingerprints, ANN similarity) as built-in ``F.*``
                      expressions wherever possible.

@@ -249,14 +249,17 @@ def contamination_check(
     sequence of slice starts — no UDF), de-duplicated per doc with
     array_distinct BEFORE the explode so multiplicity never inflates the
     ratio, then LEFT-joined against the distinct benchmark shingle set.
-    The benchmark side is tiny by construction (1/modulus of the corpus,
-    and a real eval suite is a few MB), so it is broadcast: the probe
-    side NEVER shuffles — the only exchange in the plan is the final
-    per-doc count aggregation, and map-side partial combine collapses
-    each doc's shingles before it.  At 100 TB that is one narrow pass
-    over the corpus plus a broadcast hash join, which is the only shape
-    that survives; a shuffle join on shingle text would move the whole
-    shingled corpus.
+    The benchmark side is small by construction (1/modulus of the
+    corpus, and a real eval suite is a few MB), so the planner broadcasts
+    it whenever its size estimate is under
+    ``spark.sql.autoBroadcastJoinThreshold`` (and AQE re-plans to a
+    broadcast once the runtime size is known): the probe side then never
+    shuffles — the only exchanges are the benchmark side's distinct and
+    the final per-doc count aggregation, with map-side partial combine
+    collapsing each doc's shingles before it.  At 100 TB that is one
+    narrow pass over the corpus plus a broadcast hash join.  There is no
+    forced broadcast hint: a benchmark set too large to broadcast falls
+    back to a shuffle join instead of failing on executor memory.
     """
     toks = tokens_col(col)
     starts = F.when(
@@ -280,7 +283,7 @@ def contamination_check(
         .withColumn("_hit", F.lit(1))
     )
     probe = ex.filter(F.col("doc_id") % modulus != 0)
-    joined = probe.join(F.broadcast(bench), "s", "left")
+    joined = probe.join(bench, "s", "left")
     return joined.groupBy("doc_id").agg(
         F.count("*").alias("n_shingles"),
         F.count("_hit").alias("n_hits"),

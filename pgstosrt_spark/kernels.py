@@ -17,6 +17,15 @@ Two physical strategies (pipeline.py picks):
                 decode+OCR per composition.  Right for skew: one monster
                 payload fans out to many tasks (SURVEY.md §4.3.1).
 
+Input contract: the fused and parse kernels take the pipeline's span rows
+``(doc_id, offset, kind, media_ref, text, payload)``.  Only ``kind='media'``
+rows are decoded; every other row — text spans, unknown kinds, the
+null-kind row of a document without spans — passes through unchanged as
+one row with ``seq=0`` and its kind, text (the parse kernel carries it in
+``info``) and media_ref.  The OCR kernel passes every non-``comp`` row
+through the same way, so text rides the one Python stage with the media
+and the plan needs no second branch or scan to bring it back.
+
 Error policy: the reference silently drops failing items
 (PgsOcr.cs:103-106); these kernels never stay silent — every failure emits
 a ``kind='_error'`` row and every payload a ``kind='_metric'`` row (JSON
@@ -100,13 +109,55 @@ def _error_text(exc: Exception) -> str:
     return f"{type(exc).__name__}: {exc}"
 
 
+def _frame(rows: list[tuple], schema: str) -> pd.DataFrame:
+    """Row tuples -> the output batch of a kernel declared with ``schema``.
+    Tuples and ``from_records``, not dicts: list-of-dicts construction and
+    Series item access cost ~20% of the whole kernel at scale."""
+    return pd.DataFrame.from_records(
+        rows, columns=[field.split()[0] for field in schema.split(",")]
+    )
+
+
 def make_fused_kernel(
     backend: OcrBackend | None = None,
     skip_merge: bool = False,
     force_merge_all: bool = False,
     multi_object_opacity_fix: bool = False,
 ):
-    """Fused K-parse∘K-decode∘K-ocr over (doc_id, offset, media_ref, payload)."""
+    """Fused K-parse∘K-decode∘K-ocr over span rows (doc_id, offset, kind,
+    media_ref, text, payload); non-media rows pass through."""
+
+    def payload_rows(payload, ocr: OcrBackend, part: int) -> list[tuple[int, str, str]]:
+        """One media payload -> its (seq, kind, text) rows: cues, one
+        ``_error`` per dropped composition and a ``_metric`` row — or a
+        single ``_error`` row if the payload fails as a whole (no partial
+        rows: an exception must become an ``_error`` row, never a dead
+        task)."""
+        t0 = time.perf_counter()
+        dropped: list = []
+        try:
+            cues = decode_media_payload(
+                bytes(payload),
+                backend=ocr,
+                skip_merge=skip_merge,
+                force_merge_all=force_merge_all,
+                multi_object_opacity_fix=multi_object_opacity_fix,
+                errors=dropped,
+            )
+            rows = [(seq, "cue", text) for seq, text in cues]
+            rows += [(seq, "_error", _error_text(exc)) for seq, exc in dropped]
+            metric = {
+                "bytes": len(payload),
+                "cues": len(cues),
+                # task partition id: per-partition lineage — which physical
+                # partition produced each span's metrics (north_rule)
+                "part": part,
+                "wall_ms": round((time.perf_counter() - t0) * 1e3, 3),
+            }
+            rows.append((0, "_metric", json.dumps(metric, sort_keys=True)))
+            return rows
+        except Exception as exc:  # never silent (vs PgsOcr.cs:103-106)
+            return [(0, "_error", _error_text(exc))]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -116,83 +167,24 @@ def make_fused_kernel(
         part = tc.partitionId() if tc is not None else -1
         ocr = backend or GlyphAtlasOcr()
         for pdf in batches:
-            # column-list accumulation + .tolist() iteration: pandas Series
-            # item access and list-of-dicts DataFrame construction cost
-            # ~20% of the whole kernel at scale; plain python lists don't
-            c_doc: list = []
-            c_off: list = []
-            c_seq: list = []
-            c_kind: list = []
-            c_text: list = []
-            c_ref: list = []
-            for doc_id, offset, media_ref, payload in zip(
+            out: list[tuple] = []
+            for doc_id, offset, kind, media_ref, text, payload in zip(
                 pdf["doc_id"].tolist(),
                 pdf["offset"].tolist(),
+                pdf["kind"].tolist(),
                 pdf["media_ref"].tolist(),
+                pdf["text"].tolist(),
                 pdf["payload"].tolist(),
             ):
+                if kind != "media":  # text and every other row pass through
+                    out.append((doc_id, offset, 0, kind, text, media_ref))
+                    continue
                 offset = int(offset)
-                t0 = time.perf_counter()
-                # buffer this payload's (seq, kind, text) rows locally and
-                # flush to the column lists only after try/except resolves —
-                # a mid-append exception must never leave the six lists
-                # misaligned (that would kill the task instead of emitting
-                # an _error row)
-                out_rows: list[tuple[int, str, str]] = []
-                dropped: list = []
-                try:
-                    cues = decode_media_payload(
-                        bytes(payload),
-                        backend=ocr,
-                        skip_merge=skip_merge,
-                        force_merge_all=force_merge_all,
-                        multi_object_opacity_fix=multi_object_opacity_fix,
-                        errors=dropped,
-                    )
-                    for seq, text in cues:
-                        out_rows.append((seq, "cue", text))
-                    for seq, exc in dropped:
-                        out_rows.append((seq, "_error", _error_text(exc)))
-                    out_rows.append(
-                        (
-                            0,
-                            "_metric",
-                            json.dumps(
-                                {
-                                    "bytes": len(payload),
-                                    "cues": len(cues),
-                                    # task partition id: per-partition
-                                    # lineage — which physical partition
-                                    # produced each span's metrics
-                                    # (north_rule)
-                                    "part": part,
-                                    "wall_ms": round(
-                                        (time.perf_counter() - t0) * 1e3, 3
-                                    ),
-                                },
-                                sort_keys=True,
-                            ),
-                        )
-                    )
-                except Exception as exc:  # never silent (vs PgsOcr.cs:103-106)
-                    out_rows = [(0, "_error", _error_text(exc))]
-                for seq, kind, text in out_rows:
-                    c_doc.append(doc_id)
-                    c_off.append(offset)
-                    c_seq.append(seq)
-                    c_kind.append(kind)
-                    c_text.append(text)
-                    c_ref.append(media_ref)
-            yield pd.DataFrame(
-                {
-                    "doc_id": c_doc,
-                    "offset": c_off,
-                    "seq": c_seq,
-                    "kind": c_kind,
-                    "text": c_text,
-                    "media_ref": c_ref,
-                }
-            )
+                out += [
+                    (doc_id, offset, seq, k, t, media_ref)
+                    for seq, k, t in payload_rows(payload, ocr, part)
+                ]
+            yield _frame(out, CUE_SCHEMA)
 
     return kernel
 
@@ -203,6 +195,7 @@ def make_parse_kernel(skip_merge: bool = False, force_merge_all: bool = False):
     Emits one ``kind='comp'`` row per merged display set with the PcsData
     pickled into a binary cell; decode+OCR happen downstream after a
     rebalance, so a single skewed payload spreads across the cluster.
+    Non-media rows pass through with ``seq`` 0, their text in ``info``.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -212,62 +205,41 @@ def make_parse_kernel(skip_merge: bool = False, force_merge_all: bool = False):
         tc = TaskContext.get()
         part = tc.partitionId() if tc is not None else -1
         for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, offset, media_ref, payload in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["payload"]
+            out: list[tuple] = []
+            for doc_id, offset, kind, media_ref, text, payload in zip(
+                pdf["doc_id"].tolist(),
+                pdf["offset"].tolist(),
+                pdf["kind"].tolist(),
+                pdf["media_ref"].tolist(),
+                pdf["text"].tolist(),
+                pdf["payload"].tolist(),
             ):
+                if kind != "media":  # text and every other row pass through
+                    out.append((doc_id, offset, 0, kind, media_ref, None, text))
+                    continue
+                offset = int(offset)
                 t0 = time.perf_counter()
                 try:
                     sets = decode_to_display_sets(
                         bytes(payload), skip_merge=skip_merge, force_merge_all=force_merge_all
                     )
-                    for i, pcs in enumerate(sets):
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "offset": int(offset),
-                                "seq": i + 1,
-                                "kind": "comp",
-                                "media_ref": media_ref,
-                                "pcs": pickle.dumps(pcs, protocol=pickle.HIGHEST_PROTOCOL),
-                                "info": "",
-                            }
-                        )
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "offset": int(offset),
-                            "seq": 0,
-                            "kind": "_metric",
-                            "media_ref": media_ref,
-                            "pcs": None,
-                            "info": json.dumps(
-                                {
-                                    "comps": len(sets),
-                                    "bytes": len(payload),
-                                    "parse_ms": round((time.perf_counter() - t0) * 1e3, 3),
-                                    "part": part,
-                                },
-                                sort_keys=True,
-                            ),
-                        }
-                    )
+                    blobs = [pickle.dumps(p, protocol=pickle.HIGHEST_PROTOCOL) for p in sets]
+                    metric = {
+                        "comps": len(sets),
+                        "bytes": len(payload),
+                        "parse_ms": round((time.perf_counter() - t0) * 1e3, 3),
+                        "part": part,
+                    }
+                    out += [
+                        (doc_id, offset, seq, "comp", media_ref, blob, "")
+                        for seq, blob in enumerate(blobs, 1)
+                    ]
+                    info = json.dumps(metric, sort_keys=True)
+                    out.append((doc_id, offset, 0, "_metric", media_ref, None, info))
                 except Exception as exc:
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "offset": int(offset),
-                            "seq": 0,
-                            "kind": "_error",
-                            "media_ref": media_ref,
-                            "pcs": None,
-                            "info": _error_text(exc),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "offset", "seq", "kind", "media_ref", "pcs", "info"],
-            )
+                    info = _error_text(exc)
+                    out.append((doc_id, offset, 0, "_error", media_ref, None, info))
+            yield _frame(out, COMP_SCHEMA)
 
     return kernel
 
@@ -278,7 +250,8 @@ def make_ocr_kernel(
     """Two-phase kernel B: composition rows -> cue rows (decode + OCR).
 
     Non-``comp`` rows (the parse kernel's ``_metric``/``_error`` side
-    channel) pass through unchanged, ``info`` re-labelled as ``text``.
+    channel and its pass-through rows) pass through unchanged, ``info``
+    re-labelled as ``text``.
     Routing them through this kernel instead of a separate filter branch
     means the expensive parse kernel executes exactly once — a second
     uncached branch would re-parse every payload (round-1 bench showed
@@ -291,13 +264,8 @@ def make_ocr_kernel(
         ocr = backend or GlyphAtlasOcr()
         mask = wants_mask(ocr)
         for pdf in batches:
-            c_doc: list = []
-            c_off: list = []
-            c_seq: list = []
-            c_kind: list = []
-            c_text: list = []
-            c_ref: list = []
-            for doc_id, offset, seq, in_kind, media_ref, blob, info in zip(
+            out: list[tuple] = []
+            for doc_id, offset, seq, kind, media_ref, blob, text in zip(
                 pdf["doc_id"].tolist(),
                 pdf["offset"].tolist(),
                 pdf["seq"].tolist(),
@@ -306,9 +274,7 @@ def make_ocr_kernel(
                 pdf["pcs"].tolist(),
                 pdf["info"].tolist(),
             ):
-                if in_kind != "comp":  # side-channel pass-through
-                    kind, out = in_kind, info
-                else:
+                if kind == "comp":  # every other row passes through
                     try:
                         pcs: PcsData = pickle.loads(bytes(blob))
                         img = rasterize(
@@ -316,25 +282,10 @@ def make_ocr_kernel(
                             multi_object_opacity_fix=multi_object_opacity_fix,
                             mask=mask,
                         )
-                        text = ocr.recognize(img)
-                        kind, out = "cue", cue_text(pcs.start, pcs.end, text)
+                        kind, text = "cue", cue_text(pcs.start, pcs.end, ocr.recognize(img))
                     except Exception as exc:
-                        kind, out = "_error", _error_text(exc)
-                c_doc.append(doc_id)
-                c_off.append(int(offset))
-                c_seq.append(int(seq))
-                c_kind.append(kind)
-                c_text.append(out)
-                c_ref.append(media_ref)
-            yield pd.DataFrame(
-                {
-                    "doc_id": c_doc,
-                    "offset": c_off,
-                    "seq": c_seq,
-                    "kind": c_kind,
-                    "text": c_text,
-                    "media_ref": c_ref,
-                }
-            )
+                        kind, text = "_error", _error_text(exc)
+                out.append((doc_id, offset, seq, kind, text, media_ref))
+            yield _frame(out, CUE_SCHEMA)
 
     return kernel

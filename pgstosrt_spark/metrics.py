@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import extract_cue_rows, split_side_channel
+from .pipeline import _fold, _kernel_rows, _span_rows, split_side_channel
 
 __all__ = [
     "committed_batches",
@@ -159,8 +159,6 @@ def run_with_checkpoints(
     ``max_batches`` limits work this invocation (used by tests to simulate
     a mid-run kill).  Returns the batch ids committed by THIS run.
     """
-    from .pipeline import assemble_spans
-
     done_before = set(committed_batches(out_dir, spark))
     df = _with_batch(documents, n_batches)
     committed_now: list[int] = []
@@ -171,12 +169,13 @@ def run_with_checkpoints(
             break
         batch_docs = df.filter(F.col("_batch") == batch_id).drop("_batch")
         t0 = time.perf_counter()
-        # kernel runs once: the flat rows are cached and feed both the
-        # extracted table and the metrics side-channel
-        flat = extract_cue_rows(batch_docs, mode=mode, **extract_kw).cache()
+        # one scan, kernel runs once: the flat span rows (text included)
+        # are cached and feed both the extracted table and the metrics
+        # side-channel
+        flat = _kernel_rows(_span_rows(batch_docs), mode=mode, **extract_kw).cache()
         try:
             _cues, side = split_side_channel(flat)
-            extracted = assemble_spans(batch_docs, flat)
+            extracted = _fold(flat)
             data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
             metrics_path = os.path.join(out_dir, "metrics", f"batch={batch_id}")
             extracted.write.mode("overwrite").parquet(data_path)

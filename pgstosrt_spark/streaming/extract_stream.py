@@ -21,9 +21,9 @@ Two facades over the same batch kernels (kernels.py):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..kernels import CUE_SCHEMA, make_fused_kernel
+from ..pipeline import _is_output_span, _span_rows, extract
 from ..sources.tables import DOCUMENTS_SCHEMA
 
 
@@ -37,25 +37,11 @@ def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:
 
 def extract_stream(documents: DataFrame) -> DataFrame:
     """Streaming documents -> flat span rows (text passthrough + cues)."""
-    spans = documents.select(
-        "doc_id", F.posexplode("spans").alias("pos", "span")
-    ).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+    return (
+        _span_rows(documents)
+        .mapInPandas(make_fused_kernel(), schema=CUE_SCHEMA)
+        .filter(_is_output_span())
     )
-    text_rows = spans.filter(F.col("kind") == "text").select(
-        "doc_id", "offset", F.lit(0).alias("seq"), "kind", "text", "media_ref"
-    )
-    media = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref", F.unbase64(F.col("text")).alias("payload")
-    )
-    cues = media.mapInPandas(make_fused_kernel(), schema=CUE_SCHEMA).filter(
-        F.col("kind") == "cue"
-    )
-    return text_rows.unionByName(cues)
 
 
 def extract_stream_compacted(
@@ -69,8 +55,6 @@ def extract_stream_compacted(
     MERGE variant).  Returns the DataStreamWriter — caller picks the
     trigger (``.trigger(availableNow=True).start()`` drains the backlog
     and stops, the equivalence-test mode)."""
-    from ..pipeline import extract
-
     def compact(batch_docs: DataFrame, _batch_id: int) -> None:
         # the full batch pipeline per micro-batch: kernels, shape
         # preservation, ordering — byte-identical rows to a batch run

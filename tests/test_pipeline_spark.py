@@ -148,6 +148,90 @@ def test_all_failed_doc_keeps_shape(spark):
     assert side.filter(side.kind == "_error").count() == 1
 
 
+@pytest.mark.parametrize("mode", ["fused", "two_phase", "size_bucketed"])
+def test_doc_without_spans_keeps_shape(spark, mode):
+    """A doc with ``spans=[]`` comes out with ``[]`` in every mode.  One
+    input partition and no rebalance put its all-null row in the same
+    kernel batch as the other doc's rows."""
+    payload = base64.b64encode(enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])).decode()
+    docs = spark.createDataFrame(
+        [
+            {"doc_id": "empty", "spans": []},
+            {
+                "doc_id": "m",
+                "spans": [
+                    {"kind": "text", "text": "t", "media_ref": "", "offset": 0},
+                    {"kind": "media", "text": payload, "media_ref": "pgs://m/0", "offset": 1},
+                ],
+            },
+        ],
+        schema=DOCUMENTS_SCHEMA,
+    ).coalesce(1)
+    got = _collect_spans(extract(docs, mode=mode, balance=False, size_threshold=64))
+    assert got == {
+        "empty": [],
+        "m": [("text", "t", ""), ("cue", "00:00:01,000 --> 00:00:02,000\nSOLO", "pgs://m/0")],
+    }
+
+
+def test_unknown_kind_spans_are_dropped(spark):
+    """Spans of any kind but text and media (including an input span that
+    claims kind 'cue') pass through the kernel and are dropped by the
+    fold: the doc keeps only its text spans and extracted cues."""
+    payload = base64.b64encode(enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])).decode()
+    docs = spark.createDataFrame(
+        [
+            {
+                "doc_id": "d",
+                "spans": [
+                    {"kind": "image", "text": "x", "media_ref": "img://d/0", "offset": 0},
+                    {"kind": "text", "text": "t", "media_ref": "", "offset": 1},
+                    {"kind": "cue", "text": "forged", "media_ref": "", "offset": 2},
+                    {"kind": "media", "text": payload, "media_ref": "pgs://d/3", "offset": 3},
+                ],
+            }
+        ],
+        schema=DOCUMENTS_SCHEMA,
+    )
+    want = {"d": [("text", "t", ""), ("cue", "00:00:01,000 --> 00:00:02,000\nSOLO", "pgs://d/3")]}
+    assert _collect_spans(extract(docs)) == want
+    assert _collect_spans(extract(docs, mode="two_phase")) == want
+
+
+def test_kernels_pass_non_media_rows_through_once():
+    """Direct kernel calls: a text row and a null-kind row (a doc without
+    spans) each come out exactly once, with ``seq=0``, their kind, text
+    and media_ref, from the fused kernel and from parse + OCR."""
+    import pandas as pd
+
+    from pgstosrt_spark.kernels import make_fused_kernel, make_ocr_kernel, make_parse_kernel
+
+    payload = enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])
+    batch = pd.DataFrame(
+        {
+            "doc_id": ["d", "d", "e"],
+            "offset": [0, 1, None],
+            "kind": ["text", "media", None],
+            "media_ref": ["", "pgs://d/1", None],
+            "text": ["hello", None, None],
+            "payload": [None, payload, None],
+        }
+    )
+    (fused,) = make_fused_kernel()(iter([batch]))
+    (comps,) = make_parse_kernel()(iter([batch]))
+    (two_phase,) = make_ocr_kernel()(iter([comps]))
+    for out in (fused, two_phase):
+        text = out[out["kind"] == "text"]
+        assert text[["doc_id", "offset", "seq", "text", "media_ref"]].values.tolist() == [
+            ["d", 0, 0, "hello", ""]
+        ]
+        null = out[out["kind"].isna()]
+        assert len(null) == 1 and null["doc_id"].tolist() == ["e"]
+        assert null["seq"].tolist() == [0] and null["offset"].isna().all()
+        assert out["kind"].tolist().count("cue") == 1
+        assert out["kind"].tolist().count("_metric") == 1
+
+
 def test_fused_job_reports_planted_huge_ods(spark, small_docs):
     """A 65535x65535 ODS inside a Spark job: the job completes, its doc
     keeps the other cues, the dropped composition is exactly one

@@ -206,6 +206,51 @@ def test_extraction_plan_single_pass_no_payload_shuffle(spark):
     assert "Exchange" in plan_auto[kernel_pos:], "auto-balance should engage"
 
 
+def test_extraction_plan_one_scan_one_fold(spark, tmp_path):
+    """Over a parquet ``documents`` table, extract() reads the table once
+    and folds without a join: fused has exactly 1 FileScan and 1 Exchange
+    (the groupBy), 2 Exchanges when the rebalance fires; two_phase also
+    scans once; no mode plans a Join or a BroadcastExchange."""
+    import base64
+    import re
+
+    from pgstosrt_spark.fixtures import encoder as enc
+    from pgstosrt_spark.pipeline import extract
+    from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA, read_documents
+
+    payload = base64.b64encode(enc.build_sup_from_cues([("X", 90_000, 180_000)])).decode()
+    src = str(tmp_path / "documents")
+    spark.createDataFrame(
+        [
+            {
+                "doc_id": "d",
+                "spans": [
+                    {"kind": "text", "text": "t", "media_ref": "", "offset": 0},
+                    {"kind": "media", "text": payload, "media_ref": "pgs://d/1", "offset": 1},
+                ],
+            },
+            {"doc_id": "e", "spans": []},
+        ],
+        schema=DOCUMENTS_SCHEMA,
+    ).write.parquet(src)
+    docs = read_documents(spark, src)
+
+    def counts(**kw):
+        plan = extract(docs, **kw)._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+        return (
+            len(re.findall(r"\bFileScan\b", plan)),
+            len(re.findall(r"\b(?:Exchange|ShuffleExchange)\b", plan)),
+        )
+
+    assert counts(balance=False) == (1, 1)
+    assert counts(balance=True) == (1, 2)
+    assert counts(mode="two_phase", balance=False)[0] == 1
+    assert counts(mode="two_phase", balance=True)[0] == 1
+    counts(mode="size_bucketed", balance=False)
+    counts(mode="size_bucketed", balance=True)
+
+
 def test_asof_join_is_single_shuffle_no_join(spark):
     """asof_join_last_view is union-tag + one windowed pass — the plan must
     contain NO join operator at all and exactly one hashpartitioning
@@ -368,6 +413,24 @@ def test_contamination_check_broadcasts_benchmark(spark):
     # second would mean the PROBE corpus is shuffling on shingle text —
     # the corpus-wide shuffle this operator exists to avoid.
     assert plan.count("Exchange hashpartitioning(s#") == 1, plan
+
+
+def test_contamination_check_respects_broadcast_threshold(spark):
+    """The benchmark side is broadcast only when the planner sizes it
+    under ``autoBroadcastJoinThreshold`` — no forced broadcast hint, so
+    a benchmark set too large to broadcast falls back to a shuffle join
+    instead of an executor OOM."""
+    from pgstosrt_spark.functions.text import contamination_check
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = contamination_check(docs)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_pack_sequences_one_exchange_on_source(spark):

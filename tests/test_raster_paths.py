@@ -243,7 +243,14 @@ def test_fused_kernel_error_rows_match_two_phase():
     number, ``DecodeError: ...``) as parse + OCR do for a composition the
     decode drops, next to the same cues (kernels run in-process)."""
     batch = pd.DataFrame(
-        {"doc_id": ["d"], "offset": [3], "media_ref": ["m"], "payload": [_huge_ods_payload()]}
+        {
+            "doc_id": ["d"],
+            "offset": [3],
+            "kind": ["media"],
+            "media_ref": ["m"],
+            "text": [None],
+            "payload": [_huge_ods_payload()],
+        }
     )
     (fused,) = make_fused_kernel()(iter([batch]))
     (comps,) = make_parse_kernel()(iter([batch]))
