@@ -44,10 +44,9 @@ validity labels.  The JSON carries every sample with its probe ratios plus
 a "validity" block naming rejected samples, so the recorded number is
 auditable, not just asserted.
 
-A "skew" section times fused vs two_phase vs size_bucketed (and two-phase
-rebalance widths) on the north_rule's skew shapes — one doc with 10^3
-media spans plus multi-MB single-span payloads — where the two-phase
-composition fan-out is the designed win (SURVEY.md §4.3.1).
+A "skew" section times fused vs two_phase on the north_rule's skew shapes
+— one doc with 10^3 media spans plus multi-MB single-span payloads — where
+the two-phase composition fan-out is the designed win (SURVEY.md §4.3.1).
 
 Scaling runs (local[8] vs local[32], BASELINE.md's N-vs-4N proxy) are a
 separate entrypoint: ``python bench_scaling.py`` -> BENCH/BASELINE.md.
@@ -466,7 +465,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     # mutually-confirming clean samples each (or the wall cap) so the
     # driver artifact itself carries the evidence depth
     # cap the focus loop at the remaining global budget minus a reserve for
-    # the skew section (6 queries x 1 guaranteed sample + quiet-waits) so a
+    # the skew section (2 queries x 1 guaranteed sample + quiet-waits) so a
     # noisy day degrades to thinner evidence everywhere, never to a section
     # that only gets its crash-guard single samples
     skew_reserve = 300.0
@@ -485,28 +484,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     skew_thunks: list[tuple[str, object]] = [
         ("skew_fused", lambda: _noop(extract(skew_docs, mode="fused"))),
         ("skew_two_phase", lambda: _noop(extract(skew_docs, mode="two_phase"))),
-        (
-            "skew_size_bucketed",
-            lambda: _noop(extract(skew_docs, mode="size_bucketed")),
-        ),
-        (
-            "skew_two_phase_w1x",
-            lambda: _noop(
-                extract(skew_docs, mode="two_phase", rebalance_partitions=slots)
-            ),
-        ),
-        (
-            "skew_two_phase_w8x",
-            lambda: _noop(
-                extract(skew_docs, mode="two_phase", rebalance_partitions=8 * slots)
-            ),
-        ),
-        (
-            "skew_two_phase_aqe",
-            lambda: _noop(
-                extract(skew_docs, mode="two_phase", rebalance_partitions="aqe")
-            ),
-        ),
     ]
     skew_timings, skew_samples, skew_validity = _measure_interleaved(
         skew_thunks, min_clean=2, max_passes=3

@@ -9,7 +9,7 @@ Ships per the north_rule's submission contract:
         jobs/extract_job.py \
         --input  <iceberg/parquet table of documents(doc_id, spans)> \
         --output <output dir> \
-        [--mode fused|two_phase|size_bucketed] \
+        [--mode fused|two_phase] \
         [--n-batches 64] [--max-batches N]
 
 The job is self-contained on the executors: everything it imports beyond
@@ -63,7 +63,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="documents table (parquet dir)")
     ap.add_argument("--output", required=True, help="checkpointed output dir")
-    ap.add_argument("--mode", default="fused", choices=["fused", "two_phase", "size_bucketed"])
+    ap.add_argument("--mode", default="fused", choices=["fused", "two_phase"])
     ap.add_argument("--n-batches", type=int, default=64)
     ap.add_argument("--max-batches", type=int, default=None)
     args = ap.parse_args()

@@ -6,7 +6,7 @@ PGS stream, so the sequential display-set state machine (the part Catalyst
 cannot express, SURVEY.md §2.3 A1) runs per payload *inside* the kernel
 while Spark parallelizes across payloads; pixel/byte work is numpy.
 
-Two physical strategies (pipeline.py picks):
+Two physical strategies (``pipeline.extract``'s ``mode`` picks):
   * fused     — one kernel does parse -> merge -> decode -> OCR.  No extra
                 shuffle; right when payload sizes are uniform.
   * two-phase — kernel A does the cheap, inherently-sequential byte walk
@@ -26,12 +26,20 @@ one row with ``seq=0`` and its kind, text (the parse kernel carries it in
 through the same way, so text rides the one Python stage with the media
 and the plan needs no second branch or scan to bring it back.
 
+The kernels take no decode switches: they decode with the reference's
+defaults (duplicate merge on, the multi-object opacity quirk replicated).
+``skip_merge``, ``force_merge_all`` and ``multi_object_opacity_fix`` remain
+parameters of ``pgs.decode``/``pgs.merge``/``pgs.compose``, where they
+document the reference semantics.
+
 Error policy: the reference silently drops failing items
 (PgsOcr.cs:103-106); these kernels never stay silent — every failure emits
 a ``kind='_error'`` row and every payload a ``kind='_metric'`` row (JSON
 counters), which the pipeline routes to a metrics side-channel.  The fused
 kernel emits one ``_error`` row per composition its decode drops, with that
-composition's ``seq``, as the two-phase OCR kernel does.
+composition's ``seq``, as the two-phase OCR kernel does.  A media row with
+a null ``offset`` becomes one ``_error`` row (``seq`` 0, null offset) in
+both plans.
 
 Every kernel body first calls :func:`_stamp_checked_zip_invalidation`:
 pyspark's worker calls ``importlib.invalidate_caches()`` before each task,
@@ -105,6 +113,12 @@ def _stamp_checked_zip_invalidation() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+# A media span without an offset cannot be placed in its document: the
+# file read does not enforce DOCUMENTS_SCHEMA's NOT NULL, so it becomes one
+# _error row (seq 0, null offset) and the rest of its document survives.
+NULL_OFFSET_ERROR = "ValueError: media span has a null offset"
+
+
 def _error_text(exc: Exception) -> str:
     return f"{type(exc).__name__}: {exc}"
 
@@ -118,12 +132,7 @@ def _frame(rows: list[tuple], schema: str) -> pd.DataFrame:
     )
 
 
-def make_fused_kernel(
-    backend: OcrBackend | None = None,
-    skip_merge: bool = False,
-    force_merge_all: bool = False,
-    multi_object_opacity_fix: bool = False,
-):
+def make_fused_kernel(backend: OcrBackend | None = None):
     """Fused K-parse∘K-decode∘K-ocr over span rows (doc_id, offset, kind,
     media_ref, text, payload); non-media rows pass through."""
 
@@ -136,14 +145,7 @@ def make_fused_kernel(
         t0 = time.perf_counter()
         dropped: list = []
         try:
-            cues = decode_media_payload(
-                bytes(payload),
-                backend=ocr,
-                skip_merge=skip_merge,
-                force_merge_all=force_merge_all,
-                multi_object_opacity_fix=multi_object_opacity_fix,
-                errors=dropped,
-            )
+            cues = decode_media_payload(bytes(payload), backend=ocr, errors=dropped)
             rows = [(seq, "cue", text) for seq, text in cues]
             rows += [(seq, "_error", _error_text(exc)) for seq, exc in dropped]
             metric = {
@@ -179,6 +181,9 @@ def make_fused_kernel(
                 if kind != "media":  # text and every other row pass through
                     out.append((doc_id, offset, 0, kind, text, media_ref))
                     continue
+                if pd.isna(offset):
+                    out.append((doc_id, None, 0, "_error", NULL_OFFSET_ERROR, media_ref))
+                    continue
                 offset = int(offset)
                 out += [
                     (doc_id, offset, seq, k, t, media_ref)
@@ -189,7 +194,7 @@ def make_fused_kernel(
     return kernel
 
 
-def make_parse_kernel(skip_merge: bool = False, force_merge_all: bool = False):
+def make_parse_kernel():
     """Two-phase kernel A: payload -> per-composition rows (cheap byte walk).
 
     Emits one ``kind='comp'`` row per merged display set with the PcsData
@@ -217,12 +222,13 @@ def make_parse_kernel(skip_merge: bool = False, force_merge_all: bool = False):
                 if kind != "media":  # text and every other row pass through
                     out.append((doc_id, offset, 0, kind, media_ref, None, text))
                     continue
+                if pd.isna(offset):
+                    out.append((doc_id, None, 0, "_error", media_ref, None, NULL_OFFSET_ERROR))
+                    continue
                 offset = int(offset)
                 t0 = time.perf_counter()
                 try:
-                    sets = decode_to_display_sets(
-                        bytes(payload), skip_merge=skip_merge, force_merge_all=force_merge_all
-                    )
+                    sets = decode_to_display_sets(bytes(payload))
                     blobs = [pickle.dumps(p, protocol=pickle.HIGHEST_PROTOCOL) for p in sets]
                     metric = {
                         "comps": len(sets),
@@ -244,9 +250,7 @@ def make_parse_kernel(skip_merge: bool = False, force_merge_all: bool = False):
     return kernel
 
 
-def make_ocr_kernel(
-    backend: OcrBackend | None = None, multi_object_opacity_fix: bool = False
-):
+def make_ocr_kernel(backend: OcrBackend | None = None):
     """Two-phase kernel B: composition rows -> cue rows (decode + OCR).
 
     Non-``comp`` rows (the parse kernel's ``_metric``/``_error`` side
@@ -277,11 +281,7 @@ def make_ocr_kernel(
                 if kind == "comp":  # every other row passes through
                     try:
                         pcs: PcsData = pickle.loads(bytes(blob))
-                        img = rasterize(
-                            pcs,
-                            multi_object_opacity_fix=multi_object_opacity_fix,
-                            mask=mask,
-                        )
+                        img = rasterize(pcs, mask=mask)
                         kind, text = "cue", cue_text(pcs.start, pcs.end, ocr.recognize(img))
                     except Exception as exc:
                         kind, text = "_error", _error_text(exc)

@@ -152,7 +152,6 @@ def run_with_checkpoints(
     n_batches: int = 8,
     mode: str = "fused",
     max_batches: int | None = None,
-    **extract_kw,
 ) -> list[int]:
     """Extract with per-batch snapshot commits; idempotent on re-run.
 
@@ -172,7 +171,7 @@ def run_with_checkpoints(
         # one scan, kernel runs once: the flat span rows (text included)
         # are cached and feed both the extracted table and the metrics
         # side-channel
-        flat = _kernel_rows(_span_rows(batch_docs), mode=mode, **extract_kw).cache()
+        flat = _kernel_rows(_span_rows(batch_docs), mode).cache()
         try:
             _cues, side = split_side_channel(flat)
             extracted = _fold(flat)

@@ -51,14 +51,22 @@ def pack_mkv_packets(packets: list[tuple[int, int, bytes]]) -> bytes:
 
 
 def unpack_mkv_packets(payload: bytes) -> list[tuple[int, int, bytes]]:
+    """MKPG framing -> [(start_ms, end_ms, packet)]; a header or packet
+    that runs past the end of the payload is a ``DecodeError``."""
     if payload[:4] != MKV_MAGIC:
         raise DecodeError("not an MKPG payload")
+    if len(payload) < 8:
+        raise DecodeError("truncated MKPG header")
     (count,) = struct.unpack_from(">I", payload, 4)
     pos = 8
     packets = []
-    for _ in range(count):
+    for i in range(count):
+        if pos + 20 > len(payload):
+            raise DecodeError(f"truncated MKPG packet header {i} at byte {pos}")
         start_ms, end_ms, n = struct.unpack_from(">QQI", payload, pos)
         pos += 20
+        if pos + n > len(payload):
+            raise DecodeError(f"MKPG packet {i} of {n} bytes runs past the end")
         packets.append((start_ms, end_ms, payload[pos : pos + n]))
         pos += n
     return packets
@@ -83,14 +91,15 @@ def display_sets_to_cues(
     sets: list[PcsData],
     backend: OcrBackend | None = None,
     multi_object_opacity_fix: bool = False,
-    errors: list[tuple[int, DecodeError]] | None = None,
+    errors: list[tuple[int, Exception]] | None = None,
 ) -> list[Cue]:
     """Rasterize + OCR each display set, in order (PgsOcr.cs:80-110).
 
-    The reference drops items whose decode/OCR throws (PgsOcr.cs:103-106);
-    we do the same on the output sequence (the dropped ``seq`` is absent),
-    and append ``(seq, exc)`` to ``errors`` when it is given, so the fused
-    kernel can emit an ``_error`` row per dropped composition.  A backend
+    The reference drops items whose decode/OCR throws anything
+    (PgsOcr.cs:103-106, a per-item catch); we do the same on the output
+    sequence (the dropped ``seq`` is absent), and append ``(seq, exc)`` to
+    ``errors`` when it is given, so the fused kernel can emit an
+    ``_error`` row per dropped composition, as two-phase does.  A backend
     with ``wants_mask`` gets the unpadded opacity mask instead of the RGBA
     canvas (compose.py).
     """
@@ -103,7 +112,7 @@ def display_sets_to_cues(
                 pcs, multi_object_opacity_fix=multi_object_opacity_fix, mask=mask
             )
             text = backend.recognize(img)
-        except DecodeError as exc:
+        except Exception as exc:
             if errors is not None:
                 errors.append((i + 1, exc))
             continue  # reference: log + drop (PgsOcr.cs:103-106)
@@ -117,7 +126,7 @@ def decode_media_payload(
     skip_merge: bool = False,
     force_merge_all: bool = False,
     multi_object_opacity_fix: bool = False,
-    errors: list[tuple[int, DecodeError]] | None = None,
+    errors: list[tuple[int, Exception]] | None = None,
 ) -> list[tuple[int, str]]:
     """Payload -> [(seq, cue_text)] where cue_text embeds the timecodes.
 

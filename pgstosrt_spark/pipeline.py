@@ -35,8 +35,9 @@ Scale notes (100 TB / 10^12 docs):
     decode+OCR (north_rule skew).  The shuffled rows are pickled
     ``PcsData`` and are *not* smaller than the payloads: 22.3 MB pickled
     vs 20.5 MB raw for the 17,627 compositions of 3,000 sf0.1 docs;
-  * ``balance=True`` hash-repartitions the span rows before the kernel
-    when the *input* partitioning is skewed (many payloads in few files).
+  * an input with fewer than 4x slots partitions (many payloads in few
+    files) is hash-repartitioned to 4x slots before the kernel; no option
+    changes the width or the gate.
 """
 
 from __future__ import annotations
@@ -97,134 +98,49 @@ def _span_rows(documents: DataFrame) -> DataFrame:
 
 
 def _kernel_rows(
-    rows: DataFrame,
-    mode: str = "fused",
-    backend: OcrBackend | None = None,
-    balance: bool | str = "auto",
-    rebalance_partitions: int | str | None = None,
-    size_threshold: int = 4 << 20,
-    skip_merge: bool = False,
-    force_merge_all: bool = False,
-    multi_object_opacity_fix: bool = False,
+    rows: DataFrame, mode: str = "fused", backend: OcrBackend | None = None
 ) -> DataFrame:
     """Span rows -> flat ``CUE_SCHEMA`` rows: each media row becomes its
     cue/metric/error rows, every other row passes through with ``seq`` 0.
 
-    ``balance='auto'`` repartitions the rows only when the input has
-    fewer partitions than the cluster has slots: the decode+OCR kernel is
-    CPU-bound per *row*, which byte-based file splitting cannot see, so a
-    small/compacted input would otherwise serialize the expensive stage.
-    At production scale (input partitions >> slots) this is a no-op — the
-    payload bytes never shuffle.
+    The kernels are CPU-bound per *row* (per composition in two-phase),
+    which byte-based file splits and AQE's byte-based coalescing cannot
+    see, so both stages run on ``4 * slots`` partitions: several units per
+    slot let dynamic scheduling absorb per-row cost variance and executor
+    speed skew.  The span rows are rebalanced only when the input has
+    fewer partitions than that.  The session already asks the scan for
+    that many splits (``spark.sql.files.minPartitionNum``), so this fires
+    only for input the scan cannot split; at production scale payload
+    bytes never shuffle.  Rebalances hash on keys unique per row, NOT
+    round-robin: plain ``repartition(n)`` local-sorts every column first
+    (``spark.sql.execution.sortBeforeRepartition``), which is
+    pathological for multi-KB payloads and pickled compositions.
     """
-    slots = rows.sparkSession.sparkContext.defaultParallelism
-    if balance == "auto":
-        # The session asks the scan for >= 4x slots splits
-        # (spark.sql.files.minPartitionNum — scan-level, no shuffle); the
-        # fallback below only fires for inputs the scan cannot split
-        # (unsplittable codecs, a single giant row group).  The gate matches
-        # the repartition width (4x slots) so a scan that yields e.g. 3x
-        # slots still rebalances — undersubscribed CPU-bound waves cost
-        # more than the payload-free hash shuffle does.
-        balance = rows.rdd.getNumPartitions() < 4 * slots
-    if balance:
-        # Hash repartition, NOT round-robin: plain repartition(n) local-sorts
-        # every column first (spark.sql.execution.sortBeforeRepartition, for
-        # retry determinism), which is pathological for multi-KB payload
-        # bytes.  Hash partitioning is deterministic by key, so it skips
-        # that sort; (doc_id, offset) is unique per span -> balanced.
-        rows = rows.repartition(
-            rebalance_partitions if isinstance(rebalance_partitions, int) else 4 * slots,
-            F.col("doc_id"),
-            F.col("offset"),
-        )
-
-    kernel_kw = dict(
-        backend=backend,
-        skip_merge=skip_merge,
-        force_merge_all=force_merge_all,
-        multi_object_opacity_fix=multi_object_opacity_fix,
-    )
-
-    def fused(rows: DataFrame) -> DataFrame:
-        return rows.mapInPandas(make_fused_kernel(**kernel_kw), schema=CUE_SCHEMA)
-
-    def two_phase(rows: DataFrame) -> DataFrame:
-        comps = rows.mapInPandas(
-            make_parse_kernel(skip_merge=skip_merge, force_merge_all=force_merge_all),
-            schema=COMP_SCHEMA,
-        )
-        # hash, not round-robin: avoids the sortBeforeRepartition local sort
-        # of the pickled-composition binaries; (doc_id, offset, seq) is
-        # unique per composition, so buckets stay balanced.  ALL rows ride
-        # the one repartition — the tiny _metric/_error side channel and
-        # the text rows pass through the OCR kernel unchanged instead of a
-        # second filter branch, which (uncached) would re-execute the whole
-        # parse kernel.
-        #
-        # Width: default 4x slots.  The decode+OCR stage is CPU-bound per
-        # COMPOSITION, which byte-based AQE coalescing cannot see (it
-        # balances shuffle bytes, and RLE size is a poor proxy for pixel
-        # count x OCR cost).  Measured on the skewed bench corpus (BENCH/
-        # BASELINE.md skew sections, probe-gated, two runs): every
-        # two-phase width beats fused (clean 15.8s) by ~2x; among widths,
-        # 1x slots is clean-fastest on this host (6.3-7.5s, single wave —
-        # local[32] has uniform cores, so extra waves only add Python-
-        # worker dispatch overhead), 4x ~7.6-8.3s, while 8x and
-        # AQE-advisory are consistently worst — AQE coalesces the small
-        # composition rows by BYTES into too few tasks for a
-        # per-row-CPU-bound stage.  4x stays the default for the
-        # production shape: on a heterogeneous multi-executor cluster,
-        # several units per slot is what lets dynamic scheduling absorb
-        # per-composition cost variance and executor speed skew, and it
-        # bounds partition size at high composition counts; pass
-        # ``rebalance_partitions=slots`` for the measured single-wave
-        # fast path on uniform local hosts, or 'aqe' to repartition by
-        # key only with AQE choosing the width.
-        keys = (F.col("doc_id"), F.col("offset"), F.col("seq"))
-        if rebalance_partitions == "aqe":
-            rebalanced = comps.repartition(*keys)
-        else:
-            rebalanced = comps.repartition(rebalance_partitions or 4 * slots, *keys)
-        return rebalanced.mapInPandas(
-            make_ocr_kernel(
-                backend=backend, multi_object_opacity_fix=multi_object_opacity_fix
-            ),
-            schema=CUE_SCHEMA,
-        )
-
+    if mode not in ("fused", "two_phase"):
+        raise ValueError(f"unknown mode: {mode!r} (fused | two_phase)")
+    width = 4 * rows.sparkSession.sparkContext.defaultParallelism
+    if rows.rdd.getNumPartitions() < width:
+        rows = rows.repartition(width, F.col("doc_id"), F.col("offset"))
     if mode == "fused":
-        return fused(rows)
-    if mode == "two_phase":
-        return two_phase(rows)
-    if mode == "size_bucketed":
-        # SURVEY.md §4.3.1: small payloads (and every non-media row) take
-        # the no-extra-shuffle fused path; monster payloads (whose
-        # per-composition decode+OCR would pin one task) take the
-        # two-phase split/rebalance path.  The size predicate is a cheap
-        # JVM expression over the already-decoded binary (null for
-        # non-media rows, hence the coalesce); results are a bag union,
-        # order restored by the fold.
-        #
-        # Cost note (deliberate tradeoff): the two branches are separate
-        # physical pipelines, so the source is SCANNED TWICE — every
-        # payload's bytes are read in both branches and discarded by the
-        # filter in one.  That is worth it only when monster payloads are
-        # rare and a second scan is cheaper than shuffling every small
-        # payload's parsed compositions; when scan cost dominates, plain
-        # two_phase (one scan, one composition-row shuffle) is the better
-        # 100 TB default.
-        big = F.coalesce(F.octet_length("payload") > size_threshold, F.lit(False))
-        return fused(rows.filter(~big)).unionByName(two_phase(rows.filter(big)))
-    raise ValueError(f"unknown mode: {mode!r} (fused | two_phase | size_bucketed)")
+        return rows.mapInPandas(make_fused_kernel(backend), schema=CUE_SCHEMA)
+    # two_phase: ALL rows ride the one composition rebalance — the tiny
+    # _metric/_error side channel and the text rows pass through the OCR
+    # kernel unchanged instead of a second filter branch, which (uncached)
+    # would re-execute the whole parse kernel.
+    comps = rows.mapInPandas(make_parse_kernel(), schema=COMP_SCHEMA)
+    return comps.repartition(
+        width, F.col("doc_id"), F.col("offset"), F.col("seq")
+    ).mapInPandas(make_ocr_kernel(backend), schema=CUE_SCHEMA)
 
 
-def extract_cue_rows(documents: DataFrame, **kw) -> DataFrame:
-    """Media spans -> cue/metric/error rows (flat), pre-re-aggregation.
-
-    The kernels of :func:`extract` over the media rows only; ``kw`` are
-    :func:`extract`'s options (``mode``, ``backend``, ``balance``, ...)."""
-    return _kernel_rows(_span_rows(documents).filter(F.col("kind") == "media"), **kw)
+def extract_cue_rows(
+    documents: DataFrame, mode: str = "fused", backend: OcrBackend | None = None
+) -> DataFrame:
+    """Media spans -> cue/metric/error rows (flat), pre-re-aggregation:
+    the kernels of :func:`extract` over the media rows only."""
+    return _kernel_rows(
+        _span_rows(documents).filter(F.col("kind") == "media"), mode, backend
+    )
 
 
 def split_side_channel(cue_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -317,27 +233,26 @@ def render_srt_cues(cues: DataFrame) -> DataFrame:
     )
 
 
-def render_srt_documents(documents: DataFrame, **kw) -> DataFrame:
+def render_srt_documents(documents: DataFrame) -> DataFrame:
     """The SRT sink (SURVEY.md §2.5 O5, PgsOcr.cs:59-63): extraction +
     :func:`render_srt_cues` over the resulting cue rows."""
-    cues, _side = split_side_channel(extract_cue_rows(documents, **kw))
+    cues, _side = split_side_channel(extract_cue_rows(documents))
     return render_srt_cues(cues)
-
-
 
 
 def extract(
     documents: DataFrame,
     mode: str = "fused",
     backend: OcrBackend | None = None,
-    **kw,
 ) -> DataFrame:
     """Full pipeline: documents -> extracted (same shape, FIXTURES.md §2).
 
     Text spans pass through; each media span becomes one 'cue' span per
     merged composition, carrying the source media_ref/offset, ordered by
-    (offset, seq) via the struct sort key.  ``kw``: ``balance``,
-    ``rebalance_partitions``, ``size_threshold`` and the decode switches
-    (``skip_merge``, ``force_merge_all``, ``multi_object_opacity_fix``).
+    (offset, seq) via the struct sort key.  ``mode`` picks the kernel plan:
+    ``'fused'`` decodes each payload in one kernel, ``'two_phase'`` parses
+    first and rebalances the compositions before decode + OCR, so one huge
+    payload fans out.  The decode follows the reference defaults (no merge
+    overrides, the multi-object opacity quirk replicated).
     """
-    return _fold(_kernel_rows(_span_rows(documents), mode=mode, backend=backend, **kw))
+    return _fold(_kernel_rows(_span_rows(documents), mode, backend))

@@ -44,12 +44,7 @@ def extract_stream(documents: DataFrame) -> DataFrame:
     )
 
 
-def extract_stream_compacted(
-    documents: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    mode: str = "fused",
-):
+def extract_stream_compacted(documents: DataFrame, out_path: str, checkpoint_dir: str):
     """Streaming documents -> per-doc ``(doc_id, spans)`` output table at
     ``out_path`` (parquet append; see module docstring for the Iceberg
     MERGE variant).  Returns the DataStreamWriter — caller picks the
@@ -58,7 +53,7 @@ def extract_stream_compacted(
     def compact(batch_docs: DataFrame, _batch_id: int) -> None:
         # the full batch pipeline per micro-batch: kernels, shape
         # preservation, ordering — byte-identical rows to a batch run
-        extract(batch_docs, mode=mode).write.mode("append").parquet(out_path)
+        extract(batch_docs).write.mode("append").parquet(out_path)
 
     return (
         documents.writeStream.outputMode("update")

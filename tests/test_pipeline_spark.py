@@ -58,8 +58,9 @@ def test_extract_two_phase_matches_fused(spark, small_docs):
 
 
 def test_extract_balance_equivalent(spark, small_docs):
+    """One input partition: the rebalance fires and changes nothing."""
     docs, rows = small_docs
-    got = _collect_spans(extract(docs, balance=True, rebalance_partitions=4))
+    got = _collect_spans(extract(docs.coalesce(1)))
     assert got == _expected(rows)
 
 
@@ -148,11 +149,11 @@ def test_all_failed_doc_keeps_shape(spark):
     assert side.filter(side.kind == "_error").count() == 1
 
 
-@pytest.mark.parametrize("mode", ["fused", "two_phase", "size_bucketed"])
+@pytest.mark.parametrize("mode", ["fused", "two_phase"])
 def test_doc_without_spans_keeps_shape(spark, mode):
-    """A doc with ``spans=[]`` comes out with ``[]`` in every mode.  One
-    input partition and no rebalance put its all-null row in the same
-    kernel batch as the other doc's rows."""
+    """A doc with ``spans=[]`` comes out with ``[]`` in every mode.  (That
+    its all-null row shares a kernel batch with other rows is pinned by
+    ``test_kernels_pass_non_media_rows_through_once``.)"""
     payload = base64.b64encode(enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])).decode()
     docs = spark.createDataFrame(
         [
@@ -167,7 +168,7 @@ def test_doc_without_spans_keeps_shape(spark, mode):
         ],
         schema=DOCUMENTS_SCHEMA,
     ).coalesce(1)
-    got = _collect_spans(extract(docs, mode=mode, balance=False, size_threshold=64))
+    got = _collect_spans(extract(docs, mode=mode))
     assert got == {
         "empty": [],
         "m": [("text", "t", ""), ("cue", "00:00:01,000 --> 00:00:02,000\nSOLO", "pgs://m/0")],
@@ -232,6 +233,77 @@ def test_kernels_pass_non_media_rows_through_once():
         assert out["kind"].tolist().count("_metric") == 1
 
 
+def test_kernels_turn_a_null_offset_media_row_into_one_error():
+    """Direct kernel calls: a media row without an offset becomes exactly
+    one ``_error`` row (seq 0, null offset) naming the cause, from the
+    fused kernel and from parse + OCR; the batch's other rows survive."""
+    import pandas as pd
+
+    from pgstosrt_spark.kernels import make_fused_kernel, make_ocr_kernel, make_parse_kernel
+
+    payload = enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])
+    batch = pd.DataFrame(
+        {
+            "doc_id": ["d", "d"],
+            "offset": [None, 2],
+            "kind": ["media", "media"],
+            "media_ref": ["pgs://d/1", "pgs://d/2"],
+            "text": [None, None],
+            "payload": [payload, payload],
+        }
+    )
+    (fused,) = make_fused_kernel()(iter([batch]))
+    (comps,) = make_parse_kernel()(iter([batch]))
+    (two_phase,) = make_ocr_kernel()(iter([comps]))
+    for out in (fused, two_phase):
+        err = out[out["offset"].isna()]
+        assert err[["doc_id", "seq", "kind", "media_ref"]].values.tolist() == [
+            ["d", 0, "_error", "pgs://d/1"]
+        ]
+        assert "null offset" in err["text"].iloc[0]
+        assert out["kind"].tolist().count("cue") == 1
+        assert out["kind"].tolist().count("_metric") == 1
+
+
+def test_null_offset_media_span_is_one_error_row(spark, tmp_path):
+    """A parquet ``documents`` table written with a nullable ``offset``
+    (the read does not enforce DOCUMENTS_SCHEMA's NOT NULL) and one media
+    span without an offset: both modes complete, that span is one
+    ``_error`` row (seq 0, null offset) naming the cause, and the doc
+    keeps its other spans."""
+    from pyspark.sql import types as T
+
+    from pgstosrt_spark.sources.tables import SPAN_STRUCT, read_documents
+
+    span = T.StructType([T.StructField(f.name, f.dataType, True) for f in SPAN_STRUCT.fields])
+    schema = T.StructType(
+        [T.StructField("doc_id", T.StringType()), T.StructField("spans", T.ArrayType(span))]
+    )
+    payload = base64.b64encode(enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])).decode()
+    src = str(tmp_path / "documents")
+    spark.createDataFrame(
+        [
+            {
+                "doc_id": "d",
+                "spans": [
+                    {"kind": "text", "text": "t", "media_ref": "", "offset": 0},
+                    {"kind": "media", "text": payload, "media_ref": "pgs://d/1", "offset": None},
+                    {"kind": "media", "text": payload, "media_ref": "pgs://d/2", "offset": 2},
+                ],
+            }
+        ],
+        schema=schema,
+    ).write.parquet(src)
+    docs = read_documents(spark, src)
+    want = {"d": [("text", "t", ""), ("cue", "00:00:01,000 --> 00:00:02,000\nSOLO", "pgs://d/2")]}
+    for mode in ("fused", "two_phase"):
+        assert _collect_spans(extract(docs, mode=mode)) == want
+        _cues, side = split_side_channel(extract_cue_rows(docs, mode=mode))
+        [err] = [tuple(r) for r in side.filter(side.kind == "_error").collect()]
+        assert err[:4] == ("d", None, 0, "_error") and err[5] == "pgs://d/1"
+        assert "null offset" in err[4]
+
+
 def test_fused_job_reports_planted_huge_ods(spark, small_docs):
     """A 65535x65535 ODS inside a Spark job: the job completes, its doc
     keeps the other cues, the dropped composition is exactly one
@@ -285,7 +357,7 @@ def test_skew_doc_many_media_spans(spark):
         spans.append({"kind": "media", "text": p, "media_ref": f"pgs://skew/{i}", "offset": i})
     docs = spark.createDataFrame([{"doc_id": "skew", "spans": spans}], schema=DOCUMENTS_SCHEMA)
     fused = _collect_spans(extract(docs))
-    two_phase = _collect_spans(extract(docs, mode="two_phase", rebalance_partitions=8))
+    two_phase = _collect_spans(extract(docs, mode="two_phase"))
     assert fused == two_phase
     assert len(fused["skew"]) == 60
 
@@ -293,9 +365,9 @@ def test_skew_doc_many_media_spans(spark):
 def test_skew_bench_corpus_mode_equivalence(spark):
     """The bench's skewed corpus (1 wide doc + monster single-span docs,
     fixtures.corpus.synthesize_skewed_documents) must extract identically
-    under fused / two_phase / two_phase-AQE-width / size_bucketed — the
-    skew bench (VERDICT r2 item 2) times these modes, so their
-    equivalence is the precondition for the comparison meaning anything."""
+    under fused and two_phase — the skew bench (VERDICT r2 item 2) times
+    both modes, so their equivalence is the precondition for the
+    comparison meaning anything."""
     from pgstosrt_spark.fixtures.corpus import synthesize_skewed_documents
 
     sk = synthesize_skewed_documents(
@@ -313,21 +385,7 @@ def test_skew_bench_corpus_mode_equivalence(spark):
     want = _collect_spans(extract(sk, mode="fused"))
     assert len(want["skew-monster-0"]) == 40
     assert _collect_spans(extract(sk, mode="two_phase")) == want
-    assert (
-        _collect_spans(extract(sk, mode="two_phase", rebalance_partitions="aqe"))
-        == want
-    )
-    assert (
-        _collect_spans(extract(sk, mode="size_bucketed", size_threshold=4096)) == want
-    )
     sk.unpersist()
-
-
-def test_size_bucketed_matches_fused(spark, small_docs):
-    docs, rows = small_docs
-    # threshold of 2 KB routes some payloads through each path
-    got = _collect_spans(extract(docs, mode="size_bucketed", size_threshold=2048))
-    assert got == _expected(rows)
 
 
 def test_srt_render_matches_pure_python(spark, small_docs):
@@ -357,3 +415,13 @@ def test_srt_render_matches_pure_python(spark, small_docs):
             if blocks:
                 expected[(d, span["media_ref"])] = srt
     assert got == expected
+
+
+def test_extract_takes_mode_and_backend_only(spark, small_docs):
+    """The extraction API is one plan in two modes: no tuning knobs."""
+    import inspect
+
+    assert list(inspect.signature(extract).parameters) == ["documents", "mode", "backend"]
+    docs, _rows = small_docs
+    with pytest.raises(ValueError, match="size_bucketed"):
+        extract(docs, mode="size_bucketed")

@@ -172,17 +172,37 @@ def test_embedding_near_dup_assignment_computed_once(spark):
     sim.unpersist_ivf_caches()
 
 
-def test_extraction_plan_single_pass_no_payload_shuffle(spark):
+def _parquet_documents(spark, path, rows):
+    """``rows`` topped up with one-span text docs to 4 x slots docs, written
+    one doc per file and read back: the scan alone gives the kernel
+    4 x slots partitions, so extract() plans no rebalance."""
+    from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA, read_documents
+
+    slots = spark.sparkContext.defaultParallelism
+    filler = [
+        {"doc_id": f"f{i}", "spans": [{"kind": "text", "text": "f", "media_ref": "", "offset": 0}]}
+        for i in range(4 * slots - len(rows))
+    ]
+    spark.createDataFrame(rows + filler, schema=DOCUMENTS_SCHEMA).write.option(
+        "maxRecordsPerFile", 1
+    ).parquet(path)
+    docs = read_documents(spark, path)
+    assert docs.rdd.getNumPartitions() >= 4 * slots
+    return docs
+
+
+def test_extraction_plan_single_pass_no_payload_shuffle(spark, tmp_path):
     """Fused mode: the only Exchange is the final groupBy(doc_id) of small
     string rows — base64 payloads never shuffle."""
     import base64
 
     from pgstosrt_spark.fixtures import encoder as enc
     from pgstosrt_spark.pipeline import extract
-    from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA
 
     payload = base64.b64encode(enc.build_sup_from_cues([("X", 90_000, 180_000)])).decode()
-    docs = spark.createDataFrame(
+    docs = _parquet_documents(
+        spark,
+        str(tmp_path / "documents"),
         [
             {
                 "doc_id": "d",
@@ -191,17 +211,16 @@ def test_extraction_plan_single_pass_no_payload_shuffle(spark):
                 ],
             }
         ],
-        schema=DOCUMENTS_SCHEMA,
     )
-    plan = _plan(extract(docs, balance=False), mode="simple")
+    plan = _plan(extract(docs), mode="simple")
     # the kernel runs BEFORE any exchange; exchanges appear only above it
     kernel_pos = plan.find("MapInPandas")
     assert kernel_pos > 0
     below_kernel = plan[kernel_pos:]
     assert "Exchange" not in below_kernel, "payload bytes would shuffle"
 
-    # auto mode on an under-partitioned input adds exactly the rebalance
-    plan_auto = _plan(extract(docs.coalesce(1), balance="auto"), mode="simple")
+    # an under-partitioned input adds exactly the rebalance
+    plan_auto = _plan(extract(docs.coalesce(1)), mode="simple")
     kernel_pos = plan_auto.find("MapInPandas")
     assert "Exchange" in plan_auto[kernel_pos:], "auto-balance should engage"
 
@@ -209,18 +228,19 @@ def test_extraction_plan_single_pass_no_payload_shuffle(spark):
 def test_extraction_plan_one_scan_one_fold(spark, tmp_path):
     """Over a parquet ``documents`` table, extract() reads the table once
     and folds without a join: fused has exactly 1 FileScan and 1 Exchange
-    (the groupBy), 2 Exchanges when the rebalance fires; two_phase also
-    scans once; no mode plans a Join or a BroadcastExchange."""
+    (the groupBy), 2 Exchanges when the rebalance fires (one input
+    partition); two_phase also scans once; no mode plans a Join or a
+    BroadcastExchange."""
     import base64
     import re
 
     from pgstosrt_spark.fixtures import encoder as enc
     from pgstosrt_spark.pipeline import extract
-    from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA, read_documents
 
     payload = base64.b64encode(enc.build_sup_from_cues([("X", 90_000, 180_000)])).decode()
-    src = str(tmp_path / "documents")
-    spark.createDataFrame(
+    docs = _parquet_documents(
+        spark,
+        str(tmp_path / "documents"),
         [
             {
                 "doc_id": "d",
@@ -231,24 +251,20 @@ def test_extraction_plan_one_scan_one_fold(spark, tmp_path):
             },
             {"doc_id": "e", "spans": []},
         ],
-        schema=DOCUMENTS_SCHEMA,
-    ).write.parquet(src)
-    docs = read_documents(spark, src)
+    )
 
-    def counts(**kw):
-        plan = extract(docs, **kw)._jdf.queryExecution().executedPlan().toString()
+    def counts(docs, mode="fused"):
+        plan = extract(docs, mode)._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan and "BroadcastExchange" not in plan, plan
         return (
             len(re.findall(r"\bFileScan\b", plan)),
             len(re.findall(r"\b(?:Exchange|ShuffleExchange)\b", plan)),
         )
 
-    assert counts(balance=False) == (1, 1)
-    assert counts(balance=True) == (1, 2)
-    assert counts(mode="two_phase", balance=False)[0] == 1
-    assert counts(mode="two_phase", balance=True)[0] == 1
-    counts(mode="size_bucketed", balance=False)
-    counts(mode="size_bucketed", balance=True)
+    assert counts(docs) == (1, 1)
+    assert counts(docs.coalesce(1)) == (1, 2)
+    assert counts(docs, mode="two_phase")[0] == 1
+    assert counts(docs.coalesce(1), mode="two_phase")[0] == 1
 
 
 def test_asof_join_is_single_shuffle_no_join(spark):

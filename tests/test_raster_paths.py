@@ -11,6 +11,7 @@ object or union canvas beyond ``MAX_CANVAS_PIXELS`` is ever allocated.
 from __future__ import annotations
 
 import pickle
+import struct
 import tracemalloc
 
 import numpy as np
@@ -238,33 +239,66 @@ def test_dropped_composition_is_reported_to_errors():
     assert [(seq, type(exc)) for seq, exc in errors] == [(2, DecodeError)]
 
 
+def _missing_ods_payload() -> bytes:
+    """ONE, then a two-object composition whose second ODS never arrives
+    (rasterize raises IndexError, compose.py), then THREE."""
+    two = enc.build_display_set("TWO", 270_000, 0, extra_objects=[("ALT", (800, 900), 1)])
+    segments, pos = [], 0
+    while pos < len(two):  # drop the ODS of object 1
+        (size,) = struct.unpack_from(">H", two, pos + 11)
+        seg = two[pos : pos + 13 + size]
+        if not (seg[10] == enc.SEG_ODS and seg[13:15] == b"\x00\x01"):
+            segments.append(seg)
+        pos += 13 + size
+    return (
+        enc.build_sup_from_cues([("ONE", 90_000, 180_000)])
+        + b"".join(segments)
+        + enc.build_clear_set(360_000, 1)
+        + enc.build_sup_from_cues([("THREE", 450_000, 540_000)])
+    )
+
+
+def test_composition_raising_any_error_is_dropped():
+    """Like the reference's per-item catch, a composition that raises
+    something other than DecodeError drops only itself."""
+    errors: list = []
+    got = decode_media_payload(_missing_ods_payload(), errors=errors)
+    assert [t.split("\n", 1)[1] for _, t in got] == ["ONE", "THREE"]
+    assert [(seq, type(exc)) for seq, exc in errors] == [(2, IndexError)]
+
+
 def test_fused_kernel_error_rows_match_two_phase():
     """The fused kernel emits the same ``_error`` row (seq = composition
-    number, ``DecodeError: ...``) as parse + OCR do for a composition the
-    decode drops, next to the same cues (kernels run in-process)."""
-    batch = pd.DataFrame(
-        {
-            "doc_id": ["d"],
-            "offset": [3],
-            "kind": ["media"],
-            "media_ref": ["m"],
-            "text": [None],
-            "payload": [_huge_ods_payload()],
-        }
-    )
-    (fused,) = make_fused_kernel()(iter([batch]))
-    (comps,) = make_parse_kernel()(iter([batch]))
-    (two_phase,) = make_ocr_kernel()(iter([comps]))
+    number, ``<error class>: ...``) as parse + OCR do for a composition the
+    decode drops, next to the same cues (kernels run in-process): a
+    DecodeError (huge ODS) and any other exception (missing ODS)."""
+    for payload, error_class in (
+        (_huge_ods_payload(), "DecodeError"),
+        (_missing_ods_payload(), "IndexError"),
+    ):
+        batch = pd.DataFrame(
+            {
+                "doc_id": ["d"],
+                "offset": [3],
+                "kind": ["media"],
+                "media_ref": ["m"],
+                "text": [None],
+                "payload": [payload],
+            }
+        )
+        (fused,) = make_fused_kernel()(iter([batch]))
+        (comps,) = make_parse_kernel()(iter([batch]))
+        (two_phase,) = make_ocr_kernel()(iter([comps]))
 
-    def rows(df, kind):
-        return sorted(map(tuple, df[df["kind"] == kind].itertuples(index=False)))
+        def rows(df, kind):
+            return sorted(map(tuple, df[df["kind"] == kind].itertuples(index=False)))
 
-    assert rows(fused, "cue") == rows(two_phase, "cue")
-    assert len(rows(fused, "cue")) == 2
-    (err,) = rows(fused, "_error")
-    assert rows(two_phase, "_error") == [err]
-    assert err[:3] == ("d", 3, 2) and err[4].startswith("DecodeError: ")
-    assert fused["kind"].tolist().count("_metric") == 1
+        assert rows(fused, "cue") == rows(two_phase, "cue")
+        assert len(rows(fused, "cue")) == 2
+        (err,) = rows(fused, "_error")
+        assert rows(two_phase, "_error") == [err]
+        assert err[:3] == ("d", 3, 2) and err[4].startswith(f"{error_class}: ")
+        assert fused["kind"].tolist().count("_metric") == 1
 
 
 @pytest.mark.parametrize("mask", [False, True])
