@@ -17,14 +17,21 @@ Two physical strategies (``pipeline.extract``'s ``mode`` picks):
                 decode+OCR per composition.  Right for skew: one monster
                 payload fans out to many tasks (SURVEY.md §4.3.1).
 
+One code path: the fused and parse kernels are the same row loop
+(:func:`_span_kernel`) and differ only in what one media payload becomes;
+the OCR kernel runs the oracle's own composition step
+(``pgs.decode.display_sets_to_cue_rows``) on one composition at a time.
+
 Input contract: the fused and parse kernels take the pipeline's span rows
 ``(doc_id, offset, kind, media_ref, text, payload)``.  Only ``kind='media'``
 rows are decoded; every other row — text spans, unknown kinds, the
 null-kind row of a document without spans — passes through unchanged as
-one row with ``seq=0`` and its kind, text (the parse kernel carries it in
-``info``) and media_ref.  The OCR kernel passes every non-``comp`` row
-through the same way, so text rides the one Python stage with the media
-and the plan needs no second branch or scan to bring it back.
+one row with ``seq=0`` and its kind, text and media_ref.  The parse kernel
+writes ``COMP_SCHEMA`` rows (``CUE_SCHEMA`` plus the pickled composition in
+``pcs``, null on every other row); the OCR kernel turns each ``comp`` row
+into a cue or an ``_error`` row and passes every other row through, so text
+rides the one Python stage with the media and the plan needs no second
+branch or scan to bring it back.
 
 The kernels take no decode switches: they decode with the reference's
 defaults (duplicate merge on, the multi-object opacity quirk replicated).
@@ -33,13 +40,18 @@ parameters of ``pgs.decode``/``pgs.merge``/``pgs.compose``, where they
 document the reference semantics.
 
 Error policy: the reference silently drops failing items
-(PgsOcr.cs:103-106); these kernels never stay silent — every failure emits
-a ``kind='_error'`` row and every payload a ``kind='_metric'`` row (JSON
-counters), which the pipeline routes to a metrics side-channel.  The fused
-kernel emits one ``_error`` row per composition its decode drops, with that
-composition's ``seq``, as the two-phase OCR kernel does.  A media row with
-a null ``offset`` becomes one ``_error`` row (``seq`` 0, null offset) in
-both plans.
+(PgsOcr.cs:103-106); these kernels never stay silent.  A payload that fails
+as a whole becomes one ``_error`` row (``seq`` 0); a composition the decode
+drops becomes one ``_error`` row with its ``seq``, in both plans; a media
+row with a null ``offset`` becomes one ``_error`` row (``seq`` 0, null
+offset).  The pipeline routes these rows to a metrics side channel.
+
+Metric record: every parsed payload gives one ``kind='_metric'`` row
+(``seq`` 0) whose text is the JSON object of ``METRIC_SCHEMA`` — ``bytes``
+(payload size), ``comps`` (merged display sets; each ends as exactly one
+cue or one ``_error`` row), ``part`` (the task's partition id) and
+``wall_ms``, the payload's time in the kernel that parsed it: parse,
+decode and OCR in the fused plan, parse alone in the two-phase plan.
 
 Every kernel body first calls :func:`_stamp_checked_zip_invalidation`:
 pyspark's worker calls ``importlib.invalidate_caches()`` before each task,
@@ -56,22 +68,20 @@ import pickle
 import sys
 import time
 import zipimport
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from .pgs.decode import decode_media_payload, decode_to_display_sets
-from .pgs.model import PcsData
-from .pgs.ocr import GlyphAtlasOcr, OcrBackend, wants_mask
-from .pgs.srt import cue_text
+from .pgs.decode import decode_media_payload, decode_to_display_sets, display_sets_to_cue_rows
+from .pgs.ocr import OcrBackend
 
 CUE_SCHEMA = (
     "doc_id string, offset int, seq int, kind string, text string, media_ref string"
 )
 
-COMP_SCHEMA = (
-    "doc_id string, offset int, seq int, kind string, media_ref string, pcs binary, info string"
-)
+COMP_SCHEMA = CUE_SCHEMA + ", pcs binary"
+
+METRIC_SCHEMA = "bytes long, comps long, part int, wall_ms double"
 
 
 def _stamp_checked_zip_invalidation() -> None:
@@ -123,168 +133,139 @@ def _error_text(exc: Exception) -> str:
     return f"{type(exc).__name__}: {exc}"
 
 
+def _columns(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(",")]
+
+
 def _frame(rows: list[tuple], schema: str) -> pd.DataFrame:
     """Row tuples -> the output batch of a kernel declared with ``schema``.
     Tuples and ``from_records``, not dicts: list-of-dicts construction and
     Series item access cost ~20% of the whole kernel at scale."""
-    return pd.DataFrame.from_records(
-        rows, columns=[field.split()[0] for field in schema.split(",")]
-    )
+    return pd.DataFrame.from_records(rows, columns=_columns(schema))
+
+
+def _metric(payload: bytes, comps: int, part: int, t0: float) -> str:
+    """The one ``_metric`` record of a parsed payload, as JSON text with the
+    fields of ``METRIC_SCHEMA``; ``wall_ms`` is the time since ``t0``."""
+    wall_ms = round((time.perf_counter() - t0) * 1e3, 3)
+    values = (len(payload), comps, part, wall_ms)
+    return json.dumps(dict(zip(_columns(METRIC_SCHEMA), values)), sort_keys=True)
+
+
+# One media payload and the task's partition id -> its (seq, kind, text,
+# *extra) rows; ``extra`` fills the columns ``schema`` adds to CUE_SCHEMA.
+MediaRows = Callable[[bytes, int], list[tuple]]
+
+
+def _span_kernel(schema: str, media_rows: MediaRows):
+    """The row loop of the fused and parse kernels over span rows
+    ``(doc_id, offset, kind, media_ref, text, payload)``: non-media rows
+    pass through with ``seq`` 0, a null-offset media row becomes one
+    ``_error`` row, and each other media row becomes ``media_rows(payload,
+    part)`` — or, if that raises anything, one seq-0 ``_error`` row (an
+    exception must become an ``_error`` row, never a dead task)."""
+    pad = (None,) * (len(_columns(schema)) - len(_columns(CUE_SCHEMA)))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        _stamp_checked_zip_invalidation()
+        tc = TaskContext.get()
+        # task partition id: per-partition lineage — which physical
+        # partition produced each span's metrics (north_rule)
+        part = tc.partitionId() if tc is not None else -1
+        for pdf in batches:
+            out: list[tuple] = []
+            for doc_id, offset, kind, media_ref, text, payload in zip(
+                pdf["doc_id"].tolist(),
+                pdf["offset"].tolist(),
+                pdf["kind"].tolist(),
+                pdf["media_ref"].tolist(),
+                pdf["text"].tolist(),
+                pdf["payload"].tolist(),
+            ):
+                if kind != "media":  # text and every other row pass through
+                    out.append((doc_id, offset, 0, kind, text, media_ref, *pad))
+                    continue
+                if pd.isna(offset):
+                    out.append((doc_id, None, 0, "_error", NULL_OFFSET_ERROR, media_ref, *pad))
+                    continue
+                offset = int(offset)
+                try:
+                    rows = media_rows(bytes(payload), part)
+                except Exception as exc:  # never silent (vs PgsOcr.cs:103-106)
+                    rows = [(0, "_error", _error_text(exc), *pad)]
+                out += [(doc_id, offset, seq, k, t, media_ref, *extra) for seq, k, t, *extra in rows]
+            yield _frame(out, schema)
+
+    return kernel
 
 
 def make_fused_kernel(backend: OcrBackend | None = None):
-    """Fused K-parse∘K-decode∘K-ocr over span rows (doc_id, offset, kind,
-    media_ref, text, payload); non-media rows pass through."""
+    """Fused K-parse∘K-decode∘K-ocr: each media payload -> its cues, one
+    ``_error`` row per dropped composition, then its ``_metric`` row."""
 
-    def payload_rows(payload, ocr: OcrBackend, part: int) -> list[tuple[int, str, str]]:
-        """One media payload -> its (seq, kind, text) rows: cues, one
-        ``_error`` per dropped composition and a ``_metric`` row — or a
-        single ``_error`` row if the payload fails as a whole (no partial
-        rows: an exception must become an ``_error`` row, never a dead
-        task)."""
+    def media_rows(payload: bytes, part: int) -> list[tuple]:
         t0 = time.perf_counter()
         dropped: list = []
-        try:
-            cues = decode_media_payload(bytes(payload), backend=ocr, errors=dropped)
-            rows = [(seq, "cue", text) for seq, text in cues]
-            rows += [(seq, "_error", _error_text(exc)) for seq, exc in dropped]
-            metric = {
-                "bytes": len(payload),
-                "cues": len(cues),
-                # task partition id: per-partition lineage — which physical
-                # partition produced each span's metrics (north_rule)
-                "part": part,
-                "wall_ms": round((time.perf_counter() - t0) * 1e3, 3),
-            }
-            rows.append((0, "_metric", json.dumps(metric, sort_keys=True)))
-            return rows
-        except Exception as exc:  # never silent (vs PgsOcr.cs:103-106)
-            return [(0, "_error", _error_text(exc))]
+        cues = decode_media_payload(payload, backend=backend, errors=dropped)
+        rows = [(seq, "cue", text) for seq, text in cues]
+        rows += [(seq, "_error", _error_text(exc)) for seq, exc in dropped]
+        rows.append((0, "_metric", _metric(payload, len(rows), part, t0)))
+        return rows
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        _stamp_checked_zip_invalidation()
-        tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else -1
-        ocr = backend or GlyphAtlasOcr()
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, offset, kind, media_ref, text, payload in zip(
-                pdf["doc_id"].tolist(),
-                pdf["offset"].tolist(),
-                pdf["kind"].tolist(),
-                pdf["media_ref"].tolist(),
-                pdf["text"].tolist(),
-                pdf["payload"].tolist(),
-            ):
-                if kind != "media":  # text and every other row pass through
-                    out.append((doc_id, offset, 0, kind, text, media_ref))
-                    continue
-                if pd.isna(offset):
-                    out.append((doc_id, None, 0, "_error", NULL_OFFSET_ERROR, media_ref))
-                    continue
-                offset = int(offset)
-                out += [
-                    (doc_id, offset, seq, k, t, media_ref)
-                    for seq, k, t in payload_rows(payload, ocr, part)
-                ]
-            yield _frame(out, CUE_SCHEMA)
-
-    return kernel
+    return _span_kernel(CUE_SCHEMA, media_rows)
 
 
 def make_parse_kernel():
-    """Two-phase kernel A: payload -> per-composition rows (cheap byte walk).
+    """Two-phase kernel A: each media payload -> one ``comp`` row per merged
+    display set, its ``PcsData`` pickled into ``pcs`` (the cheap byte walk),
+    then its ``_metric`` row.  Decode+OCR happen downstream after a
+    rebalance, so a single skewed payload spreads across the cluster."""
 
-    Emits one ``kind='comp'`` row per merged display set with the PcsData
-    pickled into a binary cell; decode+OCR happen downstream after a
-    rebalance, so a single skewed payload spreads across the cluster.
-    Non-media rows pass through with ``seq`` 0, their text in ``info``.
-    """
+    def media_rows(payload: bytes, part: int) -> list[tuple]:
+        t0 = time.perf_counter()
+        sets = decode_to_display_sets(payload)
+        rows = [
+            (seq, "comp", None, pickle.dumps(pcs, protocol=pickle.HIGHEST_PROTOCOL))
+            for seq, pcs in enumerate(sets, 1)
+        ]
+        rows.append((0, "_metric", _metric(payload, len(sets), part, t0), None))
+        return rows
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        _stamp_checked_zip_invalidation()
-        tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, offset, kind, media_ref, text, payload in zip(
-                pdf["doc_id"].tolist(),
-                pdf["offset"].tolist(),
-                pdf["kind"].tolist(),
-                pdf["media_ref"].tolist(),
-                pdf["text"].tolist(),
-                pdf["payload"].tolist(),
-            ):
-                if kind != "media":  # text and every other row pass through
-                    out.append((doc_id, offset, 0, kind, media_ref, None, text))
-                    continue
-                if pd.isna(offset):
-                    out.append((doc_id, None, 0, "_error", media_ref, None, NULL_OFFSET_ERROR))
-                    continue
-                offset = int(offset)
-                t0 = time.perf_counter()
-                try:
-                    sets = decode_to_display_sets(bytes(payload))
-                    blobs = [pickle.dumps(p, protocol=pickle.HIGHEST_PROTOCOL) for p in sets]
-                    metric = {
-                        "comps": len(sets),
-                        "bytes": len(payload),
-                        "parse_ms": round((time.perf_counter() - t0) * 1e3, 3),
-                        "part": part,
-                    }
-                    out += [
-                        (doc_id, offset, seq, "comp", media_ref, blob, "")
-                        for seq, blob in enumerate(blobs, 1)
-                    ]
-                    info = json.dumps(metric, sort_keys=True)
-                    out.append((doc_id, offset, 0, "_metric", media_ref, None, info))
-                except Exception as exc:
-                    info = _error_text(exc)
-                    out.append((doc_id, offset, 0, "_error", media_ref, None, info))
-            yield _frame(out, COMP_SCHEMA)
-
-    return kernel
+    return _span_kernel(COMP_SCHEMA, media_rows)
 
 
 def make_ocr_kernel(backend: OcrBackend | None = None):
-    """Two-phase kernel B: composition rows -> cue rows (decode + OCR).
+    """Two-phase kernel B: ``COMP_SCHEMA`` rows -> ``CUE_SCHEMA`` rows.
 
-    Non-``comp`` rows (the parse kernel's ``_metric``/``_error`` side
-    channel and its pass-through rows) pass through unchanged, ``info``
-    re-labelled as ``text``.
-    Routing them through this kernel instead of a separate filter branch
-    means the expensive parse kernel executes exactly once — a second
-    uncached branch would re-parse every payload (round-1 bench showed
-    that costing a full extra 128-task parse stage)."""
+    Each ``comp`` row goes through the oracle's composition step and
+    becomes its cue, or one ``_error`` row if the composition is dropped
+    or its blob does not unpickle.  Every other row (the parse kernel's
+    ``_metric``/``_error`` side channel and its pass-through rows) passes
+    through unchanged.  Routing them through this kernel instead of a
+    separate filter branch means the expensive parse kernel executes
+    exactly once — a second uncached branch would re-parse every payload
+    (round-1 bench showed that costing a full extra 128-task parse stage)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .pgs.compose import rasterize
-
         _stamp_checked_zip_invalidation()
-        ocr = backend or GlyphAtlasOcr()
-        mask = wants_mask(ocr)
         for pdf in batches:
             out: list[tuple] = []
-            for doc_id, offset, seq, kind, media_ref, blob, text in zip(
-                pdf["doc_id"].tolist(),
-                pdf["offset"].tolist(),
-                pdf["seq"].tolist(),
-                pdf["kind"].tolist(),
-                pdf["media_ref"].tolist(),
-                pdf["pcs"].tolist(),
-                pdf["info"].tolist(),
+            for doc_id, offset, seq, kind, text, media_ref, blob in zip(
+                *(pdf[c].tolist() for c in _columns(COMP_SCHEMA))
             ):
                 if kind == "comp":  # every other row passes through
+                    dropped: list = []
                     try:
-                        pcs: PcsData = pickle.loads(bytes(blob))
-                        img = rasterize(pcs, mask=mask)
-                        kind, text = "cue", cue_text(pcs.start, pcs.end, ocr.recognize(img))
+                        pcs = pickle.loads(bytes(blob))
+                        cues = display_sets_to_cue_rows([pcs], backend, errors=dropped)
                     except Exception as exc:
-                        kind, text = "_error", _error_text(exc)
+                        dropped.append((seq, exc))
+                    if dropped:
+                        kind, text = "_error", _error_text(dropped[0][1])
+                    else:
+                        kind, text = "cue", cues[0][1]
                 out.append((doc_id, offset, seq, kind, text, media_ref))
             yield _frame(out, CUE_SCHEMA)
 

@@ -30,6 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .kernels import METRIC_SCHEMA
 from .pipeline import _fold, _kernel_rows, _span_rows, split_side_channel
 
 __all__ = [
@@ -44,22 +45,18 @@ def partition_lineage(side: DataFrame) -> DataFrame:
     """Aggregate the kernels' ``_metric`` side-channel into per-physical-
     partition lineage rows (north_rule: per-partition lineage + metrics):
 
-        part, n_payloads, n_cues, n_bytes, wall_ms, n_errors
+        part, n_payloads, n_comps, n_bytes, wall_ms, n_errors
 
-    One narrow JSON projection + one tiny groupBy — the metric rows are a
-    few hundred bytes each regardless of payload size, so this aggregates
-    cheaply even when the extraction itself processed terabytes.
+    ``n_comps`` counts merged display sets (each one cue or one ``_error``
+    row), ``wall_ms`` the payloads' time in the kernel that parsed them;
+    both plans write the same ``kernels.METRIC_SCHEMA`` record, so the
+    rows mean the same in either mode.  One narrow JSON projection + one
+    tiny groupBy — the metric rows are a few hundred bytes each regardless
+    of payload size, so this aggregates cheaply even when the extraction
+    itself processed terabytes.
     """
-    metric_schema = "bytes long, cues long, part int, wall_ms double"
-    parsed = side.select(
-        "kind", F.from_json("text", metric_schema).alias("m")
-    )
-    metrics = parsed.filter(F.col("kind") == "_metric").select(
-        F.col("m.part").alias("part"),
-        F.col("m.bytes").alias("bytes"),
-        F.col("m.cues").alias("cues"),
-        F.col("m.wall_ms").alias("wall_ms"),
-    )
+    parsed = side.select("kind", F.from_json("text", METRIC_SCHEMA).alias("m"))
+    metrics = parsed.filter(F.col("kind") == "_metric").select("m.*")
     errors = (
         parsed.filter(F.col("kind") == "_error")
         .groupBy()
@@ -67,7 +64,7 @@ def partition_lineage(side: DataFrame) -> DataFrame:
     )
     agg = metrics.groupBy("part").agg(
         F.count("*").alias("n_payloads"),
-        F.sum("cues").alias("n_cues"),
+        F.sum("comps").alias("n_comps"),
         F.sum("bytes").alias("n_bytes"),
         F.round(F.sum("wall_ms"), 3).alias("wall_ms"),
     )

@@ -3,7 +3,9 @@
 This is the pure-Python composition of the whole reference pipeline
 (SURVEY.md §3): segment walk -> display-set assembly -> duplicate merge ->
 rasterize -> OCR -> ordered cues.  The Spark kernels (kernels.py) call
-exactly this code per media payload; tests compare Spark output against it.
+exactly this code: the fused kernel per media payload, the two-phase
+kernels split it at the merged display sets; tests compare Spark output
+against it.
 
 Media payload framing (fixture encoder, FIXTURES.md §1):
   * ``PG...``       — a standalone .sup byte stream (13-byte headers);
@@ -34,6 +36,7 @@ __all__ = [
     "MKV_MAGIC",
     "decode_media_payload",
     "decode_to_display_sets",
+    "display_sets_to_cue_rows",
     "display_sets_to_cues",
     "pack_mkv_packets",
     "unpack_mkv_packets",
@@ -120,6 +123,18 @@ def display_sets_to_cues(
     return cues
 
 
+def display_sets_to_cue_rows(
+    sets: list[PcsData],
+    backend: OcrBackend | None = None,
+    multi_object_opacity_fix: bool = False,
+    errors: list[tuple[int, Exception]] | None = None,
+) -> list[tuple[int, str]]:
+    """Display sets -> [(seq, cue_text)]: :func:`display_sets_to_cues` with
+    each cue rendered as its span text (the timecodes embedded)."""
+    cues = display_sets_to_cues(sets, backend, multi_object_opacity_fix, errors)
+    return [(c.seq, cue_text(c.start, c.end, c.text)) for c in cues]
+
+
 def decode_media_payload(
     payload: bytes,
     backend: OcrBackend | None = None,
@@ -133,7 +148,12 @@ def decode_media_payload(
     This is the per-media-span contract of the engine: each media span is
     replaced by one 'cue' span per merged composition (FIXTURES.md §2).
     Dropped compositions go to ``errors`` (see display_sets_to_cues).
+
+    The fused kernel calls this once per payload.  The two-phase plan runs
+    the same two steps apart: its parse kernel calls
+    :func:`decode_to_display_sets` per payload, and after the rebalance
+    its OCR kernel calls :func:`display_sets_to_cue_rows` (hence
+    :func:`display_sets_to_cues`) once per composition.
     """
     sets = decode_to_display_sets(payload, skip_merge, force_merge_all)
-    cues = display_sets_to_cues(sets, backend, multi_object_opacity_fix, errors)
-    return [(c.seq, cue_text(c.start, c.end, c.text)) for c in cues]
+    return display_sets_to_cue_rows(sets, backend, multi_object_opacity_fix, errors)

@@ -55,7 +55,6 @@ from .kernels import (
 from .pgs.ocr import OcrBackend
 
 __all__ = [
-    "explode_spans",
     "extract_cue_rows",
     "assemble_spans",
     "extract",
@@ -63,19 +62,6 @@ __all__ = [
     "render_srt_cues",
     "render_srt_documents",
 ]
-
-
-def explode_spans(documents: DataFrame) -> DataFrame:
-    """documents -> one row per span (narrow, no shuffle)."""
-    return documents.select(
-        "doc_id", F.posexplode("spans").alias("pos", "span")
-    ).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
 
 
 def _span_rows(documents: DataFrame) -> DataFrame:

@@ -118,12 +118,12 @@ def test_streaming_extraction_matches_batch(spark, tmp_path):
     got = spark.sql(
         "SELECT doc_id, offset, seq, kind, text, media_ref FROM extract_out"
     )
-    from pgstosrt_spark.pipeline import extract_cue_rows, explode_spans, split_side_channel
+    from pgstosrt_spark.pipeline import _span_rows, extract_cue_rows, split_side_channel
 
     batch_docs = spark.read.parquet(src)
     cues, _ = split_side_channel(extract_cue_rows(batch_docs))
     text_rows = (
-        explode_spans(batch_docs)
+        _span_rows(batch_docs)
         .filter(F.col("kind") == "text")
         .select("doc_id", "offset", F.lit(0).alias("seq"), "kind", "text", "media_ref")
     )

@@ -91,7 +91,8 @@ def test_span_order_is_offset_then_seq(spark):
     assert offsets == [0, 1, 1, 2]
 
 
-def test_metrics_side_channel_and_error_rows(spark):
+@pytest.mark.parametrize("mode", ["fused", "two_phase"])
+def test_metrics_side_channel_and_error_rows(spark, mode):
     good = base64.b64encode(enc.build_sup_from_cues([("OK", 90_000, 180_000)])).decode()
     bad = base64.b64encode(b"MKPG" + b"\xff" * 8).decode()  # truncated container
     docs = spark.createDataFrame(
@@ -106,25 +107,56 @@ def test_metrics_side_channel_and_error_rows(spark):
         ],
         schema=DOCUMENTS_SCHEMA,
     )
-    rows = extract_cue_rows(docs)
+    rows = extract_cue_rows(docs, mode=mode)
     cues, side = split_side_channel(rows)
     side_rows = {r["kind"]: r for r in side.collect()}
     assert "_metric" in side_rows and "_error" in side_rows
-    assert '"cues": 1' in side_rows["_metric"]["text"]
+    assert '"comps": 1' in side_rows["_metric"]["text"]
     assert cues.count() == 1
     # errors never silently vanish from the side channel, but the extracted
     # output keeps only the success path (reference drops failed items)
-    [doc] = extract(docs).collect()
+    [doc] = extract(docs, mode=mode).collect()
     assert [s["kind"] for s in doc["spans"]] == ["cue"]
 
-    # per-partition lineage rollup: payload/cue/byte/wall totals reconcile
+    # per-partition lineage rollup: payload/comp/byte/wall totals reconcile
     from pgstosrt_spark.metrics import partition_lineage
 
     lin = partition_lineage(side).collect()
     assert sum(r["n_payloads"] for r in lin) == 1  # the good payload
-    assert sum(r["n_cues"] for r in lin) == 1
+    assert sum(r["n_comps"] for r in lin) == 1
     assert all(r["n_errors"] == 1 for r in lin)  # the bad payload, global
     assert all(r["wall_ms"] >= 0 and r["n_bytes"] > 0 for r in lin)
+
+
+def test_fused_and_parse_kernels_write_one_metric_record():
+    """Direct kernel calls: the fused and parse kernels' ``_metric`` rows
+    for the same payload carry the same keys, those of METRIC_SCHEMA."""
+    import json
+
+    import pandas as pd
+
+    from pgstosrt_spark.kernels import METRIC_SCHEMA, make_fused_kernel, make_parse_kernel
+
+    payload = enc.build_sup_from_cues([("OK", 90_000, 180_000)])
+    batch = pd.DataFrame(
+        {
+            "doc_id": ["d"],
+            "offset": [0],
+            "kind": ["media"],
+            "media_ref": ["pgs://d/0"],
+            "text": [None],
+            "payload": [payload],
+        }
+    )
+    (fused,) = make_fused_kernel()(iter([batch]))
+    (comps,) = make_parse_kernel()(iter([batch]))
+    keys = [
+        set(json.loads(t))
+        for out in (fused, comps)
+        for t in out.loc[out["kind"] == "_metric", "text"]
+    ]
+    assert len(keys) == 2 and keys[0] == keys[1]
+    assert keys[0] == {field.split()[0] for field in METRIC_SCHEMA.split(",")}
 
 
 def test_all_failed_doc_keeps_shape(spark):

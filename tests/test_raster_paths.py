@@ -99,7 +99,7 @@ def test_backend_without_attribute_gets_padded_rgba(variant):
             "kind": ["comp"] * len(sets),
             "media_ref": ["m"] * len(sets),
             "pcs": [pickle.dumps(p) for p in sets],
-            "info": [""] * len(sets),
+            "text": [""] * len(sets),
         }
     )
     (out,) = make_ocr_kernel(backend=two_phase)(iter([batch]))
