@@ -183,31 +183,12 @@ def main() -> None:
 
     repo = os.path.dirname(os.path.abspath(__file__))
     # ensure the cached corpus exists (built once, shared by all levels)
-    from bench import _build_corpus_cache
+    from bench import _build_corpus_cache, _replicate_corpus
     from pgstosrt_spark.session import get_spark
 
     spark = get_spark("pgstosrt-corpus", cpus=16)
     corpus = _build_corpus_cache(spark, args.sf_dir, os.path.join(repo, ".bench_cache"))
-    if args.replicate > 1:
-        from pyspark.sql import functions as F
-
-        rep_path = f"{corpus}_x{args.replicate}"
-        if not os.path.exists(os.path.join(rep_path, "_SUCCESS")):
-            base = spark.read.parquet(corpus)
-            (
-                base.select(
-                    F.explode(F.sequence(F.lit(0), F.lit(args.replicate - 1))).alias("_r"),
-                    "doc_id",
-                    "spans",
-                )
-                .select(
-                    F.concat_ws("-", "doc_id", "_r").alias("doc_id"), "spans"
-                )
-                .repartition(128, F.col("doc_id"))
-                .write.mode("overwrite")
-                .parquet(rep_path)
-            )
-        corpus = rep_path
+    corpus = _replicate_corpus(spark, corpus, args.replicate)
     spark.stop()
 
     pairs = [(4, 16)] + ([] if args.skip_supplementary else [(8, 32)])

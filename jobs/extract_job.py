@@ -34,19 +34,10 @@ import json
 def build_session(app: str):
     from pyspark.sql import SparkSession
 
+    from pgstosrt_spark.session import WORKLOAD_CONF
+
     # master/executors come from spark-submit; these are workload confs only
-    # (see pgstosrt_spark/session.py for the local-mode rationale)
-    return (
-        SparkSession.builder.appName(app)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.sql.files.maxPartitionBytes", "64m")
-        .getOrCreate()
-    )
+    return SparkSession.builder.appName(app).config(map=WORKLOAD_CONF).getOrCreate()
 
 
 def _tune_scan_parallelism(spark) -> None:

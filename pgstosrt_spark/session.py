@@ -7,21 +7,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Workload confs, applied by every session builder (this local-mode factory
+# and the spark-submit entrypoint jobs/extract_job.py):
+#   * AQE on (runtime re-plan, skew-join splitting, partition coalescing);
+#   * Arrow on, with a low ``maxRecordsPerBatch`` — media payloads are
+#     multi-KB..MB binaries, so small record batches bound Python-worker
+#     memory (SURVEY.md §4.3.2);
+#   * UTC session timezone (duckdb-oracle comparability).
+WORKLOAD_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+    "spark.sql.files.maxPartitionBytes": "64m",
+}
+
+
 def get_spark(
     app: str = "pgstosrt_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """local[cpus] session with the engine's defaults.
-
-    * AQE on (runtime re-plan, skew-join splitting, partition coalescing);
-    * Arrow on, with a low ``maxRecordsPerBatch`` — media payloads are
-      multi-KB..MB binaries, so small record batches bound Python-worker
-      memory (SURVEY.md §4.3.2);
-    * UTC session timezone (duckdb-oracle comparability);
-    * shuffle partitions ~ cores for local mode (not the 200 default).
-    """
+    """local[cpus] session with ``WORKLOAD_CONF`` and shuffle partitions
+    ~ cores for local mode (not the 200 default)."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or max(cpus, 8)
     builder = (
@@ -29,15 +40,9 @@ def get_spark(
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
+        .config(map=WORKLOAD_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "64m")
         # CPU-bound kernels need even waves even when the corpus is small or
         # compacted: ask the file scan for >= 4x slots splits (a scan-level
         # knob — no shuffle, unlike repartition, whose round-robin mode

@@ -33,17 +33,6 @@ DOCUMENTS_SCHEMA = T.StructType(
     ]
 )
 
-CUE_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("offset", T.IntegerType(), False),
-        T.StructField("seq", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-    ]
-)
-
 # driver-generated TPC-H-ish tables (TESTDATA.md)
 DRIVER_TABLES = (
     "region",

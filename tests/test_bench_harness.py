@@ -1,198 +1,74 @@
-"""Unit tests for the bench harness's sample bookkeeping (no Spark).
+"""Unit tests for the driver bench's sampling and printed line (no Spark).
 
-The round-3 verdict's top item was the bench evidence channel; these pin
-the two rules that keep the record honest:
-  * the recorded time is the min over ALL samples — interference on this
-    host is additive (a burst can only inflate a wall time), so a fast
-    sample is valid evidence regardless of its probe bracket;
-  * validity labels (under_sampled / unsettled) still come from the
-    probe-clean subset, so a record resting on dirty-probed samples is
-    flagged, never silently trusted.
+They pin the two rules that keep the driver-recorded headline honest:
+  * the recorded time is the min over ALL samples, taken in interleaved
+    round-robin passes — interference on a shared host is additive (a
+    burst can only inflate a wall time);
+  * the printed line fits the bounded stdout tail the driver keeps, so
+    per-sample lists live only in the detail file.
 """
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
+import json
 
 import bench
 
 
-def _s(sec, pre=1.0, post=1.0):
-    return {"sec": sec, "pre": pre, "post": post}
-
-
-def test_clean_samples_gate_on_probes_and_time_ratio():
-    ss = [
-        _s(10.0),                      # clean
-        _s(9.0, pre=0.5),              # dirty pre
-        _s(9.5, post=0.5),             # dirty post
-        _s(25.0),                      # clean probes but > 2x best -> burst
-    ]
-    clean = bench._clean_samples(ss)
-    assert [s["sec"] for s in clean] == [10.0]
-
-
 def test_record_is_min_over_all_samples_not_min_over_clean(monkeypatch):
-    """A probe-clean slow sample must not beat a faster sample whose
-    post-probe caught a burst that landed after the measured work (the
-    r3->r4 extract_two_phase 24.4s-vs-14.3s case)."""
-    samples = iter(
-        [
-            (24.4, 1.0, 1.0),   # pass 0: slow but probe-clean
-            (14.3, 1.0, 0.60),  # pass 1: fast, post-probe dirty
-        ]
-    )
-    monkeypatch.setattr(bench, "_wait_quiet", lambda: next_probe[0])
-    monkeypatch.setattr(bench, "_probe", lambda: next_probe[1])
-    next_probe = [1.0, 1.0]
-
-    clock = [0.0]
-
-    def fake_perf():
-        return clock[0]
-
-    monkeypatch.setattr(bench.time, "perf_counter", fake_perf)
-
-    def thunk():
-        sec, pre, post = next(samples)
-        next_probe[0], next_probe[1] = pre, post
-        clock[0] += sec
-
-    timings, ss, validity = bench._measure_interleaved(
-        [("q", thunk)], min_clean=2, max_passes=2
-    )
-    assert timings["q"] == 14.3
-    # ...and the honesty flag fires: only one clean sample < min_clean
-    assert "q" in validity["under_sampled"]
-
-
-def test_settled_requires_consistent_clean_samples():
-    tight = [_s(10.0), _s(10.4)]
-    spread = [_s(10.0), _s(14.0)]
-    assert bench._settled(tight, target=2)
-    assert not bench._settled(spread, target=2)
-
-
-def test_focus_headliners_samples_until_clean_target(monkeypatch):
-    """VERDICT r4 item 2: the focused loop keeps re-measuring ONLY the
-    named headliners until each holds >= target clean, mutually-confirming
-    samples — and stamps its samples focus=true for the audit trail."""
-    monkeypatch.setattr(bench, "_wait_quiet", lambda: 1.0)
-    monkeypatch.setattr(bench, "_probe", lambda: 1.0)
+    """Every pass samples every query once, in round-robin order, and the
+    record is the fastest sample wherever it landed (the 24.4s-vs-14.3s
+    extract_two_phase case: a slow first pass must not set the record)."""
     clock = [0.0]
     monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
-    monkeypatch.setattr(bench.time, "time", lambda: clock[0])
+    secs = {"a": iter([24.4, 14.3, 20.0, 15.0]), "b": iter([1.0] * bench.PASSES)}
+    calls = []
 
-    calls = {"hl": 0, "other": 0}
-
-    def hl():
-        calls["hl"] += 1
-        clock[0] += 10.0
-
-    def other():
-        calls["other"] += 1
-        clock[0] += 1.0
-
-    # headliner starts with one dirty sample only -> needs 3 clean
-    samples = {"hl": [_s(30.0, pre=0.5)], "other": [_s(1.0), _s(1.0)]}
-    bench._focus_headliners(
-        samples, [("hl", hl), ("other", other)], ["hl"], target=3, cap_sec=1e9
-    )
-    assert calls["other"] == 0, "focus loop must not touch non-headliners"
-    clean = bench._clean_samples(samples["hl"])
-    assert len(clean) >= 3
-    assert all(s.get("focus") for s in samples["hl"][1:])
-    timings, validity = bench._finalize(samples, min_clean=2)
-    assert timings["hl"] == 10.0
-    assert "hl" not in validity["under_sampled"]
-    assert "hl" not in validity["unsettled"]
-
-
-def test_focus_headliners_respects_wall_cap(monkeypatch):
-    monkeypatch.setattr(bench, "_wait_quiet", lambda: 0.5)  # never clean
-    monkeypatch.setattr(bench, "_probe", lambda: 0.5)
-    clock = [0.0]
-    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
-    monkeypatch.setattr(bench.time, "time", lambda: clock[0])
-
-    def hl():
-        clock[0] += 10.0
-
-    samples = {"hl": []}
-    bench._focus_headliners(samples, [("hl", hl)], ["hl"], target=3, cap_sec=35.0)
-    # dirty probes forever -> loop must stop at the cap, not spin
-    assert 1 <= len(samples["hl"]) <= 4
-    assert not bench._settled([_s(10.0)], target=2)
-
-
-def test_global_deadline_stops_sampling_but_guarantees_one_sample(monkeypatch):
-    """r5: a killed bench run writes NO artifact — the global deadline must
-    instead stop new samples and finalize.  Queries that already hold a
-    sample are skipped past the deadline; a query with ZERO samples still
-    gets exactly one (every name needs a timings entry)."""
-    monkeypatch.setattr(bench, "_wait_quiet", lambda: 1.0)
-    monkeypatch.setattr(bench, "_probe", lambda: 1.0)
-    clock = [0.0]
-    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
-    monkeypatch.setattr(bench.time, "time", lambda: clock[0])
-    monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
-    monkeypatch.setattr(bench, "_DEADLINE", [5.0])  # already nearly past
-
-    def q(dt):
+    def thunk(name):
         def run():
-            clock[0] += dt
+            calls.append(name)
+            clock[0] += next(secs[name])
+
         return run
 
-    thunks = [("a", q(10.0)), ("b", q(10.0))]
-    # first sample of "a" blows through the deadline; "b" must STILL get
-    # its one guaranteed sample, then everything stops
-    timings, samples, validity = bench._measure_interleaved(
-        thunks, min_clean=3, max_passes=10
-    )
-    assert len(samples["a"]) == 1 and len(samples["b"]) == 1
-    assert set(timings) == {"a", "b"}
-
-    # the focus loop must refuse to start new samples past the deadline
-    before = {k: list(v) for k, v in samples.items()}
-    bench._focus_headliners(samples, thunks, ["a"], target=5, cap_sec=1e9)
-    assert samples == before
+    timings, samples = bench._measure([("a", thunk("a")), ("b", thunk("b"))])
+    assert calls == ["a", "b"] * bench.PASSES
+    assert samples == {"a": [24.4, 14.3, 20.0, 15.0], "b": [1.0] * bench.PASSES}
+    assert timings == {"a": 14.3, "b": 1.0}
 
 
-def test_deadline_unset_means_unbounded(monkeypatch):
-    monkeypatch.setattr(bench, "_DEADLINE", [None])
-    assert not bench._past_deadline()
-
-
-def test_section_started_entirely_past_deadline_still_samples_each_once(monkeypatch):
-    """Regression: the skew section runs AFTER the main passes — if those
-    exhausted the budget, _measure_interleaved used to break before any
-    sample existed and _finalize crashed on min() of an empty list."""
-    monkeypatch.setattr(bench, "_wait_quiet", lambda: 1.0)
-    monkeypatch.setattr(bench, "_probe", lambda: 1.0)
-    clock = [100.0]
-    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
-    monkeypatch.setattr(bench.time, "time", lambda: clock[0])
-    monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
-    monkeypatch.setattr(bench, "_DEADLINE", [5.0])  # long past
-
-    def q():
-        clock[0] += 2.0
-
-    timings, samples, validity = bench._measure_interleaved(
-        [("x", q), ("y", q)], min_clean=2, max_passes=3
-    )
-    assert len(samples["x"]) == 1 and len(samples["y"]) == 1
-    assert timings["x"] == 2.0 and timings["y"] == 2.0
-
-
-def test_settled_uses_fastest_k_clean_not_all_clean():
-    """Interference only adds time: one slow-but-clean sample from a
-    drifted window must not block settling when the fastest `target`
-    clean samples mutually confirm (observed live 2026-08-19: 90
-    samples because a 22%-spread clean set never converged)."""
-    fast_confirmed_plus_slow = [_s(8.8), _s(9.3), _s(10.8), _s(9.1)]
-    assert bench._settled(fast_confirmed_plus_slow, target=3)
-    still_spread = [_s(8.8), _s(10.3), _s(10.8)]
-    assert not bench._settled(still_spread, target=3)
+def test_printed_line_fits_the_driver_tail():
+    """The driver keeps the last 2,000 characters of stdout; a longer line
+    records no headline at all."""
+    names = ["extract_fused", "extract_two_phase", *bench.DRIVER_QUERIES]
+    assert len(names) == 25
+    samples = {n: [123.456] * bench.PASSES for n in names}
+    skew_samples = {n: [123.456] * bench.PASSES for n in ("skew_fused", "skew_two_phase")}
+    result = {
+        "metric": "extraction wall-clock (fused pipeline, interleaved corpus "
+        "replicated into the work-dominated regime; min of 4 interleaved passes)",
+        "value": 123.456,
+        "unit": "sec",
+        "queries": {n: min(ss) for n, ss in samples.items()},
+        "sf": "sf0.1",
+        "docs": 123456,
+        "docs_per_sec": 12345.6,
+        "cpus": 32,
+        "warm_full_pass": True,
+        "samples": samples,
+        "skew": {
+            "docs": 9,
+            "shapes": "1 doc x 1000 media spans + 8 docs x 1 multi-MB span",
+            "queries": {n: min(ss) for n, ss in skew_samples.items()},
+            "samples": skew_samples,
+            "two_phase_default_width": 128,
+        },
+    }
+    detail_file = "/" + "d" * 120 + "/BENCH/r5_bench_detail.json"
+    line = bench._compact(result, detail_file)
+    assert len(line) < 2000
+    assert "samples" not in line
+    parsed = json.loads(line)
+    assert set(parsed["queries"]) == set(names)
+    assert set(parsed["skew"]["queries"]) == {"skew_fused", "skew_two_phase"}
+    assert parsed["detail_file"] == detail_file
