@@ -22,11 +22,12 @@ one query only.  The benchmark of record is ``extractbench/run.py``, whose
 ``cpu_s`` resists host noise; this line is the driver's wide view.
 
 A "skew" section times fused vs two_phase on the skew shapes — one doc
-with 10^3 media spans plus multi-MB single-span payloads — where the
-two-phase composition fan-out is the designed win (SURVEY.md §4.3.1).
+with 10^3 media spans plus $SPARK_GRAFT_REPLICATE multi-MB single-span
+payloads — where the two-phase composition fan-out is the designed win
+(SURVEY.md §4.3.1).
 
 Per-query sample lists go to a sidecar file (default
-BENCH/r5_bench_detail.json, override $SPARK_GRAFT_BENCH_DETAIL) named by
+.bench_cache/bench_detail.json, override $SPARK_GRAFT_BENCH_DETAIL) named by
 the line's "detail_file": the driver keeps only a bounded stdout tail, so
 the printed line must stay under 2,000 characters.
 
@@ -114,18 +115,18 @@ def _replicate_corpus(spark, corpus: str, factor: int) -> str:
     return rep_path
 
 
-def _build_skew_cache(spark, cache_dir: str) -> str:
+def _build_skew_cache(spark, cache_dir: str, n_monsters: int) -> str:
     from pyspark.sql import functions as F
 
     from pgstosrt_spark.fixtures.corpus import synthesize_skewed_documents
 
-    path = os.path.join(cache_dir, "documents_skewed_1000_12000")
+    path = os.path.join(cache_dir, f"documents_skewed_1000_{n_monsters}x12000")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # monster docs one row each; keep file layout parallel but do NOT
         # pre-split beyond doc granularity — span-level skew must survive
         # into the scan, that is the point of the corpus
         synthesize_skewed_documents(
-            spark, n_wide_spans=1000, monster_cues=12000
+            spark, n_wide_spans=1000, n_monster_docs=n_monsters, monster_cues=12000
         ).repartition(16, F.col("doc_id")).write.mode("overwrite").parquet(path)
     return path
 
@@ -155,16 +156,16 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
 
     import __spark_entry__ as entrymod
     from pgstosrt_spark.pipeline import extract
-    from pgstosrt_spark.session import get_spark
+    from pgstosrt_spark.session import TASKS_PER_SLOT, get_spark
     from pgstosrt_spark.sources.tables import read_documents
 
     spark = get_spark("pgstosrt-bench", cpus=cpus)
     cache_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
-    corpus_path = _build_corpus_cache(spark, sf_dir, cache_dir)
-    corpus_path = _replicate_corpus(
-        spark, corpus_path, int(os.environ.get("SPARK_GRAFT_REPLICATE", "8"))
-    )
-    skew_path = _build_skew_cache(spark, cache_dir)
+    # one size knob: the replication factor is also the skew section's
+    # monster count, so a small run is small in both sections
+    replicate = int(os.environ.get("SPARK_GRAFT_REPLICATE", "8"))
+    corpus_path = _replicate_corpus(spark, _build_corpus_cache(spark, sf_dir, cache_dir), replicate)
+    skew_path = _build_skew_cache(spark, cache_dir, replicate)
     docs = read_documents(spark, corpus_path)
     n_docs = docs.count()
     skew_docs = read_documents(spark, skew_path)
@@ -217,11 +218,11 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         "samples": samples,
         "skew": {
             "docs": n_skew_docs,
-            "shapes": "1 doc x 1000 media spans + 8 docs x 1 multi-MB span "
-            "(12k compositions each)",
+            "shapes": f"1 doc x 1000 media spans + {replicate} docs x 1 multi-MB "
+            "span (12k compositions each)",
             "queries": skew_timings,
             "samples": skew_samples,
-            "two_phase_default_width": 4 * slots,
+            "two_phase_default_width": TASKS_PER_SLOT * slots,
         },
     }
     spark.stop()
@@ -246,9 +247,7 @@ def main() -> None:
 
     detail_file = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH", "r5_bench_detail.json"
-        ),
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache", "bench_detail.json"),
     )
     os.makedirs(os.path.dirname(detail_file), exist_ok=True)
     with open(detail_file, "w") as f:

@@ -41,13 +41,15 @@ def build_session(app: str):
 
 
 def _tune_scan_parallelism(spark) -> None:
-    """Set spark.sql.files.minPartitionNum >= 4x slots (same rationale as
-    session.get_spark): the CPU-bound kernels need at least a few waves of
-    scan splits even when the input is small/compacted.  Must run after
-    getOrCreate() because defaultParallelism (executors x cores) is only
-    known once the session exists."""
+    """Set spark.sql.files.minPartitionNum >= TASKS_PER_SLOT x slots (same
+    rationale as session.get_spark): the CPU-bound kernels need at least a
+    few waves of scan splits even when the input is small/compacted.  Must
+    run after getOrCreate() because defaultParallelism (executors x cores)
+    is only known once the session exists."""
+    from pgstosrt_spark.session import TASKS_PER_SLOT
+
     slots = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.files.minPartitionNum", str(4 * slots))
+    spark.conf.set("spark.sql.files.minPartitionNum", str(TASKS_PER_SLOT * slots))
 
 
 def main() -> None:

@@ -53,6 +53,7 @@ from .kernels import (
     make_parse_kernel,
 )
 from .pgs.ocr import OcrBackend
+from .session import TASKS_PER_SLOT
 
 __all__ = [
     "extract_cue_rows",
@@ -91,20 +92,21 @@ def _kernel_rows(
 
     The kernels are CPU-bound per *row* (per composition in two-phase),
     which byte-based file splits and AQE's byte-based coalescing cannot
-    see, so both stages run on ``4 * slots`` partitions: several units per
-    slot let dynamic scheduling absorb per-row cost variance and executor
-    speed skew.  The span rows are rebalanced only when the input has
-    fewer partitions than that.  The session already asks the scan for
-    that many splits (``spark.sql.files.minPartitionNum``), so this fires
-    only for input the scan cannot split; at production scale payload
-    bytes never shuffle.  Rebalances hash on keys unique per row, NOT
-    round-robin: plain ``repartition(n)`` local-sorts every column first
+    see, so both stages run on ``TASKS_PER_SLOT * slots`` partitions (4 per
+    slot): several units per slot let dynamic scheduling absorb per-row
+    cost variance and executor speed skew.  The span rows are rebalanced
+    only when the input has fewer partitions than that.  The session
+    already asks the scan for that many splits
+    (``spark.sql.files.minPartitionNum``), so this fires only for input the
+    scan cannot split; at production scale payload bytes never shuffle.
+    Rebalances hash on keys unique per row, NOT round-robin: plain
+    ``repartition(n)`` local-sorts every column first
     (``spark.sql.execution.sortBeforeRepartition``), which is
     pathological for multi-KB payloads and pickled compositions.
     """
     if mode not in ("fused", "two_phase"):
         raise ValueError(f"unknown mode: {mode!r} (fused | two_phase)")
-    width = 4 * rows.sparkSession.sparkContext.defaultParallelism
+    width = TASKS_PER_SLOT * rows.sparkSession.sparkContext.defaultParallelism
     if rows.rdd.getNumPartitions() < width:
         rows = rows.repartition(width, F.col("doc_id"), F.col("offset"))
     if mode == "fused":

@@ -6,6 +6,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Tasks per executor slot for the CPU-bound kernel stages: the scan split
+# floor (``spark.sql.files.minPartitionNum``, here and in
+# jobs/extract_job.py) and the rebalance width (pipeline._kernel_rows, which
+# says why).
+TASKS_PER_SLOT = 4
 
 # Workload confs, applied by every session builder (this local-mode factory
 # and the spark-submit entrypoint jobs/extract_job.py):
@@ -28,32 +33,31 @@ WORKLOAD_CONF = {
 def get_spark(
     app: str = "pgstosrt_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """local[cpus] session with ``WORKLOAD_CONF`` and shuffle partitions
     ~ cores for local mode (not the 200 default)."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = shuffle_partitions or max(cpus, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.default.parallelism", str(cpus))
         .config(map=WORKLOAD_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # CPU-bound kernels need even waves even when the corpus is small or
-        # compacted: ask the file scan for >= 4x slots splits (a scan-level
-        # knob — no shuffle, unlike repartition, whose round-robin mode
-        # local-sorts every row including multi-KB payload bytes).  At
-        # production scale input splits >> 4x slots, so this is a no-op.
+        # compacted: ask the file scan for >= TASKS_PER_SLOT x slots splits
+        # (a scan-level knob — no shuffle, unlike repartition, whose
+        # round-robin mode local-sorts every row including multi-KB payload
+        # bytes).  At production scale input splits >> that, so this is a
+        # no-op.
         # Price: each extra Python task costs the residual fixed overhead,
         # ~0.08 CPU-s on a 4-core VM (slope of trivial mapInPandas jobs,
         # 16 vs 64 tasks).  That holds with the kernels' stamp-checked zip
         # invalidation (kernels.py); without it pyspark re-reads
         # pyspark.zip on every task and a task costs ~0.25 CPU-s.
-        .config("spark.sql.files.minPartitionNum", str(4 * cpus))
+        .config("spark.sql.files.minPartitionNum", str(TASKS_PER_SLOT * cpus))
     )
     if extra_conf:
         for k, v in extra_conf.items():

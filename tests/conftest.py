@@ -7,6 +7,6 @@ import pytest
 def spark():
     from pgstosrt_spark.session import get_spark
 
-    s = get_spark("pgstosrt-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("pgstosrt-tests", cpus=8)
     yield s
     s.stop()

@@ -37,14 +37,12 @@ def test_record_is_min_over_all_samples_not_min_over_clean(monkeypatch):
     assert timings == {"a": 14.3, "b": 1.0}
 
 
-def test_printed_line_fits_the_driver_tail():
-    """The driver keeps the last 2,000 characters of stdout; a longer line
-    records no headline at all."""
+def _result() -> dict:
+    """A full-size run_bench result: 25 queries + 2 skew queries."""
     names = ["extract_fused", "extract_two_phase", *bench.DRIVER_QUERIES]
-    assert len(names) == 25
     samples = {n: [123.456] * bench.PASSES for n in names}
     skew_samples = {n: [123.456] * bench.PASSES for n in ("skew_fused", "skew_two_phase")}
-    result = {
+    return {
         "metric": "extraction wall-clock (fused pipeline, interleaved corpus "
         "replicated into the work-dominated regime; min of 4 interleaved passes)",
         "value": 123.456,
@@ -64,6 +62,14 @@ def test_printed_line_fits_the_driver_tail():
             "two_phase_default_width": 128,
         },
     }
+
+
+def test_printed_line_fits_the_driver_tail():
+    """The driver keeps the last 2,000 characters of stdout; a longer line
+    records no headline at all."""
+    result = _result()
+    names = list(result["queries"])
+    assert len(names) == 25
     detail_file = "/" + "d" * 120 + "/BENCH/r5_bench_detail.json"
     line = bench._compact(result, detail_file)
     assert len(line) < 2000
@@ -72,3 +78,17 @@ def test_printed_line_fits_the_driver_tail():
     assert set(parsed["queries"]) == set(names)
     assert set(parsed["skew"]["queries"]) == {"skew_fused", "skew_two_phase"}
     assert parsed["detail_file"] == detail_file
+
+
+def test_default_detail_file_is_untracked(monkeypatch, tmp_path, capsys):
+    """Without $SPARK_GRAFT_BENCH_DETAIL the detail file goes to the
+    gitignored .bench_cache/, never over a committed BENCH/ artifact."""
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_DETAIL", raising=False)
+    monkeypatch.setattr(bench, "run_bench", lambda sf_dir, cpus: _result())
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    bench.main()
+    detail_file = json.loads(capsys.readouterr().out)["detail_file"]
+    assert detail_file.startswith(str(tmp_path / ".bench_cache") + "/")
+    with open(detail_file) as f:
+        assert json.load(f) == _result()
+    assert not (tmp_path / "BENCH").exists()
