@@ -53,15 +53,21 @@ cue or one ``_error`` row), ``part`` (the task's partition id) and
 ``wall_ms``, the payload's time in the kernel that parsed it: parse,
 decode and OCR in the fused plan, parse alone in the two-phase plan.
 
-Every kernel body first calls :func:`_stamp_checked_zip_invalidation`:
-pyspark's worker calls ``importlib.invalidate_caches()`` before each task,
-which on CPython < 3.13 re-reads every zipimported archive (``pyspark.zip``,
-``--py-files``) — a fixed ~0.25 CPU-s per task that the helper removes.
+Every kernel body first calls two helpers, one per fixed cost that
+pyspark puts on each task of a Python worker:
+  * :func:`_stamp_checked_zip_invalidation` — the worker calls
+    ``importlib.invalidate_caches()`` before each task, which on CPython
+    < 3.13 re-reads every zipimported archive (``pyspark.zip``,
+    ``--py-files``): ~0.25 CPU-s per task;
+  * :func:`_freeze_import_heap` — the daemon runs ``gc.collect()`` after
+    each task of a reused worker, a full collection over the ~73.6k objects
+    the worker's imports leave tracked: ~20–30 ms of CPU per task.
 """
 
 from __future__ import annotations
 
 import functools
+import gc
 import json
 import os
 import pickle
@@ -123,6 +129,27 @@ def _stamp_checked_zip_invalidation() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+_heap_frozen = False
+
+
+def _freeze_import_heap() -> None:
+    """Move the worker's import-time heap out of the cyclic GC's reach.
+
+    pyspark's daemon runs ``gc.collect()`` after every task of a reused
+    worker (``pyspark/daemon.py``).  A full collection walks every tracked
+    object, and the ~73.6k that the worker's imports (pandas, pyarrow,
+    numpy, pyspark, this package) leave behind made it cost ~20–30 ms of
+    CPU per task.  ``gc.freeze()`` moves them to the permanent generation,
+    which collections skip (then ~0.001 ms); objects made by later tasks
+    are collected as before.  Once per process: freezing again would also
+    pin whatever the previous task left, so later calls are no-ops.
+    """
+    global _heap_frozen
+    if not _heap_frozen:
+        gc.freeze()
+        _heap_frozen = True
+
+
 # A media span without an offset cannot be placed in its document: the
 # file read does not enforce DOCUMENTS_SCHEMA's NOT NULL, so it becomes one
 # _error row (seq 0, null offset) and the rest of its document survives.
@@ -170,6 +197,7 @@ def _span_kernel(schema: str, media_rows: MediaRows):
         from pyspark import TaskContext
 
         _stamp_checked_zip_invalidation()
+        _freeze_import_heap()
         tc = TaskContext.get()
         # task partition id: per-partition lineage — which physical
         # partition produced each span's metrics (north_rule)
@@ -250,6 +278,7 @@ def make_ocr_kernel(backend: OcrBackend | None = None):
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _stamp_checked_zip_invalidation()
+        _freeze_import_heap()
         for pdf in batches:
             out: list[tuple] = []
             for doc_id, offset, seq, kind, text, media_ref, blob in zip(

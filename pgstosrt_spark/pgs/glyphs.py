@@ -145,9 +145,8 @@ def _pack_cols(arr: np.ndarray) -> tuple[int, ...]:
 
 @lru_cache(maxsize=1)
 def packed_atlas() -> dict[tuple[int, ...], str]:
-    """Column-integer key -> char: the fast-path lookup used by the OCR
-    line recognizer (one vectorized pack per text line, tiny-int Python
-    ops per glyph — no numpy calls per cell)."""
+    """Column-integer key -> char: what the OCR line recognizer looks a
+    row-cropped cell up in when its cell memo misses."""
     out: dict[tuple[int, ...], str] = {}
     for ch, arr in atlas().items():
         key = _pack_cols(_crop(arr))

@@ -18,6 +18,7 @@ Backends without the attribute get RGBA.
 
 from __future__ import annotations
 
+import re
 from typing import Protocol
 
 import numpy as np
@@ -29,6 +30,17 @@ __all__ = ["OcrBackend", "GlyphAtlasOcr", "TesseractOcr", "default_backend"]
 # decoder-side layout constants (see pgs/glyphs.py): adjacent glyph
 # *contents* are separated by <= 5 blank columns; a space leaves >= 9.
 _SPACE_GAP = 7
+# over per-row ink flags (0/1 bytes): ink rows joined by single blank rows
+_LINE = re.compile(rb"\x01(?:\x00?\x01)*")
+# over per-column ink flags: a maximal run of ink columns, one glyph cell
+_INK = re.compile(rb"[^\x00]+")
+# (bytes per column, packed cell columns) -> char; a pure function of the
+# key, so the memo is exact.  Keys over _CELL_KEY_MAX bytes (no glyph of a
+# band under 64 rows is that large) are not kept, and the memo is emptied
+# when it reaches _CELL_MEMO_MAX entries, so it stays under ~1 MiB.
+_CELL_KEY_MAX = 64
+_CELL_MEMO_MAX = 4096
+_CELL_CHARS: dict[tuple[int, bytes], str] = {}
 
 
 class OcrBackend(Protocol):
@@ -53,53 +65,56 @@ class GlyphAtlasOcr:
 
     def recognize(self, img: np.ndarray) -> str:
         mask = img if img.ndim == 2 else img[:, :, 3] > 0
-        if not mask.any():
-            return ""  # blank canvas -> empty text (then Trim, PgsOcr.cs:122)
-        row_any = mask.any(axis=1)
-        rows = np.flatnonzero(row_any)
-        lines: list[str] = []
-        # split on blank-row gaps >= 2: glyphs like ':' and '!' contain a
-        # single internal blank row; encoder lines are >= 3 rows apart
-        breaks = np.flatnonzero(np.diff(rows) > 2)
-        starts = np.concatenate(([0], breaks + 1))
-        ends = np.concatenate((breaks, [len(rows) - 1]))
-        for s, e in zip(starts, ends):
-            band = mask[rows[s] : rows[e] + 1]
-            lines.append(self._recognize_line(band))
+        # a line is a run of ink rows; it ends at a gap of >= 2 blank rows:
+        # glyphs like ':' and '!' contain a single internal blank row, and
+        # encoder lines are >= 3 rows apart.  A blank canvas has no line
+        # and reads as empty text (then Trim, PgsOcr.cs:122).
+        rows = mask.any(axis=1).tobytes()
+        lines = [self._recognize_line(mask[slice(*m.span())]) for m in _LINE.finditer(rows)]
         return "\n".join(lines).strip()
 
     @staticmethod
     def _recognize_line(band: np.ndarray) -> str:
-        # ONE vectorized pass packs every column of the line into an
-        # integer (bit r = pixel at row r); per-glyph work is then pure
-        # tiny-int Python against the packed atlas — numpy-per-cell calls
-        # (crop/any/flatnonzero) were ~40% of kernel time
-        h = band.shape[0]
-        colvals = (
-            band.astype(np.int64) << np.arange(h, dtype=np.int64)[:, None]
-        ).sum(axis=0)
-        cols = np.flatnonzero(colvals)
-        if cols.size == 0:
-            return ""
-        breaks = np.flatnonzero(np.diff(cols) > 1)
-        starts = np.concatenate(([0], breaks + 1))
-        ends = np.concatenate((breaks, [len(cols) - 1]))
-        vals = colvals.tolist()
-        glyphs = packed_atlas()
+        # ONE vectorized pass packs every column of the line into bytes
+        # (bit r % 8 of byte r // 8 = pixel at row r, for any band height);
+        # one regex pass over the per-column ink flags finds the cells, and
+        # each cell's raw bytes map to its char through a memo — no numpy
+        # and no per-column Python work per cell
+        packed = np.packbits(band, axis=0, bitorder="little")
+        nb = packed.shape[0]
+        cols = packed.T.tobytes()  # column c = cols[c * nb : (c + 1) * nb]
         out: list[str] = []
-        prev_end_col: int | None = None
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            c0, c1 = int(cols[s]), int(cols[e])
-            if prev_end_col is not None and c0 - prev_end_col - 1 >= _SPACE_GAP:
+        prev_end = None
+        for cell in _INK.finditer(packed.any(axis=0).tobytes()):
+            c0, c1 = cell.span()
+            if prev_end is not None and c0 - prev_end >= _SPACE_GAP:
                 out.append(" ")
-            cell = vals[c0 : c1 + 1]
-            orv = 0
-            for v in cell:
-                orv |= v
-            r0 = (orv & -orv).bit_length() - 1
-            out.append(glyphs.get(tuple(v >> r0 for v in cell), "?"))
-            prev_end_col = c1
+            key = (nb, cols[c0 * nb : c1 * nb])
+            ch = _CELL_CHARS.get(key)
+            out.append(ch if ch is not None else _cell_char(key))
+            prev_end = c1
         return "".join(out)
+
+
+def _cell_char(key: tuple[int, bytes]) -> str:
+    """``(bytes per column, packed cell columns)`` -> its glyph, or '?'.
+    Row-crops the cell (shifts every column down by its lowest ink row)
+    and looks the columns up in the packed atlas; memoizes the answer."""
+    nb, raw = key
+    if nb == 1:  # bands of up to 8 rows, i.e. every line of the 5x7 font
+        vals = list(raw)
+    else:
+        vals = [int.from_bytes(raw[i : i + nb], "little") for i in range(0, len(raw), nb)]
+    orv = 0
+    for v in vals:
+        orv |= v
+    r0 = (orv & -orv).bit_length() - 1
+    ch = packed_atlas().get(tuple([v >> r0 for v in vals]), "?")
+    if len(raw) <= _CELL_KEY_MAX:
+        if len(_CELL_CHARS) >= _CELL_MEMO_MAX:
+            _CELL_CHARS.clear()
+        _CELL_CHARS[key] = ch
+    return ch
 
 
 class TesseractOcr:

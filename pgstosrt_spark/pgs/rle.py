@@ -28,11 +28,14 @@ DecodeError before anything is allocated.  The reference would try to
 allocate it (a 65535x65535 ODS header asks for 16 GiB of RGBA) and fail
 less gracefully.
 
-The opcode walk is per-run (never per-pixel); pixel writes are one numpy
-scatter, plus one LUT gather on the RGBA path.
+Decode is one regex split into tokens, when the stream allows it (see
+``decode_rle_runs``), else a per-run walk (never per-pixel); either way
+pixel writes are vectorized, plus one LUT gather on the RGBA path.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 
@@ -60,6 +63,44 @@ def _check_canvas(width: int, height: int) -> None:
         )
 
 
+# One escape token: 0x00 plus one to three bytes, how many is fixed by the
+# second byte; 0x00 0x00 is the end of line.  The grammar is
+# prefix-determined, so splitting on this pattern from byte 0 yields the
+# walk's own tokens, with the literal stretches between them.  A 0x00 left
+# unmatched (a truncated escape, a lone 0x00) can only sit in the trailing
+# literal.
+_TOKEN = re.compile(
+    rb"(\x00(?:[\x00-\x3f]|[\x40-\xbf][\x00-\xff]|[\xc0-\xff][\x00-\xff]{2}))"
+)
+_EOL = b"\x00\x00"
+_COLOURS = np.arange(256, dtype=np.int16)
+# escape token -> its pixels as colour-index bytes; a pure function of the
+# token, so the memo is exact.  Emptied when it reaches the bound, which
+# caps it at ~16 MiB (a run is at most 16,383 pixels).
+_TOKEN_MEMO_MAX = 1024
+_TOKEN_PIXELS: dict[bytes, bytes] = {}
+
+
+def _token_pixels(token: bytes) -> bytes:
+    """Escape token -> its pixels (EOL and zero-length runs -> none)."""
+    px = _TOKEN_PIXELS.get(token)
+    if px is not None:
+        return px
+    b = token[1]
+    if b < 0x40:  # EOL (b == 0) or short run of colour 0
+        px = bytes(b)
+    elif b < 0x80:  # long run of colour 0
+        px = bytes(((b - 0x40) << 8) + token[2])
+    elif b < 0xC0:  # short run of colour c
+        px = token[2:3] * (b - 0x80)
+    else:  # long run of colour c
+        px = token[3:4] * (((b - 0xC0) << 8) + token[2])
+    if len(_TOKEN_PIXELS) >= _TOKEN_MEMO_MAX:
+        _TOKEN_PIXELS.clear()
+    _TOKEN_PIXELS[token] = px
+    return px
+
+
 def decode_rle_runs(
     buf: bytes, width: int, height: int, alpha_lut: np.ndarray | None = None
 ) -> np.ndarray:
@@ -72,16 +113,75 @@ def decode_rle_runs(
     would throw IndexOutOfRangeException (buffer overrun), and before
     allocating when the image exceeds ``MAX_CANVAS_PIXELS``.
 
-    Physical shape: every escape starts with a 0x00 byte, so the Python
-    loop steps per ESCAPE (zero positions precomputed with numpy) and a
-    maximal stretch of nonzero bytes between escapes — each byte one
-    literal pixel of its own colour — is consumed as ONE slice-backed
-    segment instead of per-byte iterations.  Pixel writes happen in a
-    single vectorized scatter afterwards; the stream-order replay fallback
-    handles the rare overlapping-cursor case (overfilled row + EOL
-    snap-back).
+    Physical shape: one regex split tokenizes the stream (``_TOKEN``),
+    each escape expands to its pixel bytes through a memo, and the joined
+    pixels go through one ``frombuffer`` and one alpha gather.  That is
+    exact only when the pixels land back to back from pixel 0: every
+    EOL-terminated row holds exactly ``width`` pixels (no snap-back, no
+    skipped row), the trailing literal holds no 0x00 (no truncated escape,
+    no lone 0x00) and the pixels fit the canvas.  Every other stream —
+    under- or over-filled rows, truncation, overrun — goes to
+    :func:`_decode_rle_walk`, which also raises the overrun error.
     """
     _check_canvas(width, height)
+    if width > 0 and height > 0:
+        img = _decode_rle_split(buf, width, height, alpha_lut)
+        if img is not None:
+            return img
+    return _decode_rle_walk(buf, width, height, alpha_lut)
+
+
+def _decode_rle_split(
+    buf: bytes, width: int, height: int, alpha_lut: np.ndarray | None
+) -> np.ndarray | None:
+    """The fast path of :func:`decode_rle_runs`, or None when the stream
+    needs the walk."""
+    parts = _TOKEN.split(buf)  # literal, token, literal, ..., literal
+    if 0 in parts[-1]:
+        return None
+    tokens = parts[1::2]
+    try:
+        parts[1::2] = map(_TOKEN_PIXELS.__getitem__, tokens)
+    except KeyError:
+        parts[1::2] = map(_token_pixels, tokens)
+    # every EOL must end a row of exactly width pixels (token j is
+    # parts[2j+1]); lengths are checked before anything is joined, so a
+    # hostile stream never builds more than the canvas
+    n_eol = tokens.count(_EOL)
+    start = j = 0
+    for _ in range(n_eol):
+        j = tokens.index(_EOL, j)
+        if sum(map(len, parts[start : 2 * j + 1])) != width:
+            return None
+        start = 2 * j + 2
+        j += 1
+    total = width * height
+    if n_eol * width + sum(map(len, parts[start:])) > total:
+        return None
+    pixels = b"".join(parts)
+    if alpha_lut is None:
+        colours = _COLOURS
+    else:
+        colours = _COLOURS.copy()
+        colours[~(alpha_lut > 0)] = -1
+    img = np.full(total, -1, dtype=np.int16)
+    img[: len(pixels)] = colours[np.frombuffer(pixels, dtype=np.uint8)]
+    return img
+
+
+def _decode_rle_walk(
+    buf: bytes, width: int, height: int, alpha_lut: np.ndarray | None = None
+) -> np.ndarray:
+    """Stream-order walk of :func:`decode_rle_runs` for any stream.
+
+    Every escape starts with a 0x00 byte, so the Python loop steps per
+    ESCAPE (zero positions precomputed with numpy) and a maximal stretch of
+    nonzero bytes between escapes — each byte one literal pixel of its own
+    colour — is consumed as ONE slice-backed segment instead of per-byte
+    iterations.  Pixel writes happen in a single vectorized scatter
+    afterwards; the stream-order replay fallback handles the rare
+    overlapping-cursor case (overfilled row + EOL snap-back).
+    """
     total = width * height
     p = 0  # pixel cursor (num1)
     col = 0  # column counter (num2)

@@ -52,11 +52,14 @@ def get_spark(
         # round-robin mode local-sorts every row including multi-KB payload
         # bytes).  At production scale input splits >> that, so this is a
         # no-op.
-        # Price: each extra Python task costs the residual fixed overhead,
-        # ~0.08 CPU-s on a 4-core VM (slope of trivial mapInPandas jobs,
-        # 16 vs 64 tasks).  That holds with the kernels' stamp-checked zip
-        # invalidation (kernels.py); without it pyspark re-reads
-        # pyspark.zip on every task and a task costs ~0.25 CPU-s.
+        # Price: each extra Python task costs a fixed overhead.  pyspark
+        # puts two costs on every task of a worker, and the kernels remove
+        # both (kernels.py): it re-reads pyspark.zip before the task
+        # (~0.25 CPU-s; stamp-checked zip invalidation), and it runs a full
+        # gc.collect() after it (~20-30 ms; the import heap is frozen).
+        # What is left in the Python worker is ~0.004 CPU-s per task, vs
+        # ~0.037 without the freeze (4-core VM, slope of trivial
+        # mapInPandas jobs, 16 vs 64 tasks).
         .config("spark.sql.files.minPartitionNum", str(TASKS_PER_SLOT * cpus))
     )
     if extra_conf:
