@@ -129,9 +129,6 @@ def _stamp_checked_zip_invalidation() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-_heap_frozen = False
-
-
 def _freeze_import_heap() -> None:
     """Move the worker's import-time heap out of the cyclic GC's reach.
 
@@ -142,12 +139,11 @@ def _freeze_import_heap() -> None:
     CPU per task.  ``gc.freeze()`` moves them to the permanent generation,
     which collections skip (then ~0.001 ms); objects made by later tasks
     are collected as before.  Once per process: freezing again would also
-    pin whatever the previous task left, so later calls are no-ops.
+    pin whatever the previous task left, so once the permanent generation
+    is non-empty later calls are no-ops.
     """
-    global _heap_frozen
-    if not _heap_frozen:
+    if not gc.get_freeze_count():
         gc.freeze()
-        _heap_frozen = True
 
 
 # A media span without an offset cannot be placed in its document: the

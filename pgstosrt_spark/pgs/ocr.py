@@ -101,10 +101,7 @@ def _cell_char(key: tuple[int, bytes]) -> str:
     Row-crops the cell (shifts every column down by its lowest ink row)
     and looks the columns up in the packed atlas; memoizes the answer."""
     nb, raw = key
-    if nb == 1:  # bands of up to 8 rows, i.e. every line of the 5x7 font
-        vals = list(raw)
-    else:
-        vals = [int.from_bytes(raw[i : i + nb], "little") for i in range(0, len(raw), nb)]
+    vals = [int.from_bytes(raw[i : i + nb], "little") for i in range(0, len(raw), nb)]
     orv = 0
     for v in vals:
         orv |= v

@@ -74,31 +74,18 @@ _TOKEN = re.compile(
 )
 _EOL = b"\x00\x00"
 _COLOURS = np.arange(256, dtype=np.int16)
-# escape token -> its pixels as colour-index bytes; a pure function of the
-# token, so the memo is exact.  Emptied when it reaches the bound, which
-# caps it at ~16 MiB (a run is at most 16,383 pixels).
-_TOKEN_MEMO_MAX = 1024
-_TOKEN_PIXELS: dict[bytes, bytes] = {}
 
 
-def _token_pixels(token: bytes) -> bytes:
-    """Escape token -> its pixels (EOL and zero-length runs -> none)."""
-    px = _TOKEN_PIXELS.get(token)
-    if px is not None:
-        return px
+def _run(token: bytes) -> tuple[int, bytes]:
+    """Escape token -> (pixel count, colour byte); EOL -> (0, ...)."""
     b = token[1]
     if b < 0x40:  # EOL (b == 0) or short run of colour 0
-        px = bytes(b)
-    elif b < 0x80:  # long run of colour 0
-        px = bytes(((b - 0x40) << 8) + token[2])
-    elif b < 0xC0:  # short run of colour c
-        px = token[2:3] * (b - 0x80)
-    else:  # long run of colour c
-        px = token[3:4] * (((b - 0xC0) << 8) + token[2])
-    if len(_TOKEN_PIXELS) >= _TOKEN_MEMO_MAX:
-        _TOKEN_PIXELS.clear()
-    _TOKEN_PIXELS[token] = px
-    return px
+        return b, b"\x00"
+    if b < 0x80:  # long run of colour 0
+        return ((b - 0x40) << 8) + token[2], b"\x00"
+    if b < 0xC0:  # short run of colour c
+        return b - 0x80, token[2:3]
+    return ((b - 0xC0) << 8) + token[2], token[3:4]  # long run of colour c
 
 
 def decode_rle_runs(
@@ -114,7 +101,7 @@ def decode_rle_runs(
     allocating when the image exceeds ``MAX_CANVAS_PIXELS``.
 
     Physical shape: one regex split tokenizes the stream (``_TOKEN``),
-    each escape expands to its pixel bytes through a memo, and the joined
+    each distinct escape expands to its pixel bytes once, and the joined
     pixels go through one ``frombuffer`` and one alpha gather.  That is
     exact only when the pixels land back to back from pixel 0: every
     EOL-terminated row holds exactly ``width`` pixels (no snap-back, no
@@ -140,13 +127,17 @@ def _decode_rle_split(
     if 0 in parts[-1]:
         return None
     tokens = parts[1::2]
-    try:
-        parts[1::2] = map(_TOKEN_PIXELS.__getitem__, tokens)
-    except KeyError:
-        parts[1::2] = map(_token_pixels, tokens)
+    total = width * height
+    # every distinct token is in the stream, so when their runs alone pass
+    # the canvas the stream overruns: it goes to the walk before a single
+    # run is built.  Otherwise each distinct token is expanded once.
+    token_runs = {token: _run(token) for token in set(tokens)}
+    if sum(n for n, _ in token_runs.values()) > total:
+        return None
+    runs = {token: colour * n for token, (n, colour) in token_runs.items()}
+    parts[1::2] = map(runs.__getitem__, tokens)
     # every EOL must end a row of exactly width pixels (token j is
-    # parts[2j+1]); lengths are checked before anything is joined, so a
-    # hostile stream never builds more than the canvas
+    # parts[2j+1])
     n_eol = tokens.count(_EOL)
     start = j = 0
     for _ in range(n_eol):
@@ -155,7 +146,6 @@ def _decode_rle_split(
             return None
         start = 2 * j + 2
         j += 1
-    total = width * height
     if n_eol * width + sum(map(len, parts[start:])) > total:
         return None
     pixels = b"".join(parts)

@@ -1,11 +1,10 @@
 """``decode_rle_runs``'s regex-split fast path against the stream-order walk.
 
 ``decode_rle_runs`` tokenizes a stream with one regex split and expands the
-tokens through a memo when the pixels land back to back from pixel 0, and
-hands every other stream to ``rle._decode_rle_walk``.  These tests feed
-both the same streams — encoder-built, mutated, truncated, hand-built with
-under- and over-filled rows, zero-length runs and a lone trailing 0x00 —
-and require the same int16 image or the same ``DecodeError`` message.
+tokens when the pixels land back to back from pixel 0, and hands every
+other stream to ``rle._decode_rle_walk``.  These tests feed both the same
+streams — encoder-built, mutated, truncated, hand-built with under- and
+over-filled rows, zero-length runs and a lone trailing 0x00 — and require the same int16 image or the same ``DecodeError`` message.
 Width and height are >= 1: ``decode_image`` returns a blank canvas before
 anything smaller reaches the decoder.
 """
@@ -180,20 +179,32 @@ def test_edge_streams_match_the_walk(buf, width, height):
         _assert_same(buf, width, height, alpha)
 
 
-def test_token_memo_is_bounded():
+def test_distinct_long_runs_match_the_walk():
     rng = random.Random(7)
     for _ in range(40):
-        # ~80 distinct long colour runs per stream: the memo fills and empties
+        # ~80 distinct long colour runs per stream, on a canvas they fill
+        # exactly, one pixel short and one pixel over
         runs = [_run_token(rng, rng.randint(64, 0x3FFF)) for _ in range(80)]
-        total = sum(len(rle._token_pixels(t)) for t in runs)
-        _assert_same(b"".join(runs), total, 1, None)
-        assert len(rle._TOKEN_PIXELS) <= rle._TOKEN_MEMO_MAX
+        buf = b"".join(runs)
+        total = sum(rle._run(t)[0] for t in runs)
+        for width in (total, total - 1, total + 1):
+            _assert_same(buf, width, 1, None)
 
 
-def test_stream_past_the_canvas_builds_no_pixels():
-    """16,000 runs of 16,383 pixels (262 M) against a 3840x2160 canvas: the
-    overrun is found from token lengths, before any pixel is joined."""
-    buf = b"\x00\xff\xff\x01" * 16_000
+@pytest.mark.parametrize(
+    "buf",
+    [
+        b"\x00\xff\xff\x01" * 16_000,
+        # a different long colour run each time: none shares its pixels
+        b"".join(
+            bytes([0, 0xFF, k & 0xFF, 1 + (k >> 8)]) for k in range(16_000)
+        ),
+    ],
+    ids=["repeated", "distinct"],
+)
+def test_stream_past_the_canvas_builds_no_pixels(buf):
+    """16,000 runs of ~16,300 pixels (262 M) against a 3840x2160 canvas: the
+    overrun is found from the run lengths, before any run is built."""
     tracemalloc.start()
     try:
         with pytest.raises(DecodeError, match="RLE overrun"):
