@@ -830,7 +830,7 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents
             ), p AS (
                 SELECT * FROM t
-                WHERE lower(codec_id) = 's_hdmv/pgs' AND lower(language) = 'eng'
+                WHERE codec_id = 'S_HDMV/PGS' AND lower(language) = 'eng'
             ), r AS (
                 SELECT *, row_number() OVER (
                     PARTITION BY lower(source || '.' || language ||

@@ -156,7 +156,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
 
     import __spark_entry__ as entrymod
     from pgstosrt_spark.pipeline import extract
-    from pgstosrt_spark.session import TASKS_PER_SLOT, get_spark
+    from pgstosrt_spark.session import get_spark, kernel_tasks
     from pgstosrt_spark.sources.tables import read_documents
 
     spark = get_spark("pgstosrt-bench", cpus=cpus)
@@ -192,7 +192,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     timings, samples = _measure(thunks)
 
     # ---- skew section: the two-phase escape hatch must WIN here --------
-    slots = spark.sparkContext.defaultParallelism
     skew_timings, skew_samples = _measure(
         [
             ("skew_fused", lambda: _noop(extract(skew_docs, mode="fused"))),
@@ -222,7 +221,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
             "span (12k compositions each)",
             "queries": skew_timings,
             "samples": skew_samples,
-            "two_phase_default_width": TASKS_PER_SLOT * slots,
+            "two_phase_default_width": kernel_tasks(spark),
         },
     }
     spark.stop()

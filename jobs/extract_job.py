@@ -21,35 +21,14 @@ resumes from the last committed batch with no recomputation (north_rule:
 
 On a real cluster, SparkSession comes from spark-submit's conf (master,
 executors, memory); the get_spark() factory is only a local-mode
-convenience, so this entrypoint builds from SparkSession.builder directly
-with the same workload-tuned settings.
+convenience, so this entrypoint passes SparkSession.builder straight to
+session.workload_session, the same workload confs and scan split floor.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-
-
-def build_session(app: str):
-    from pyspark.sql import SparkSession
-
-    from pgstosrt_spark.session import WORKLOAD_CONF
-
-    # master/executors come from spark-submit; these are workload confs only
-    return SparkSession.builder.appName(app).config(map=WORKLOAD_CONF).getOrCreate()
-
-
-def _tune_scan_parallelism(spark) -> None:
-    """Set spark.sql.files.minPartitionNum >= TASKS_PER_SLOT x slots (same
-    rationale as session.get_spark): the CPU-bound kernels need at least a
-    few waves of scan splits even when the input is small/compacted.  Must
-    run after getOrCreate() because defaultParallelism (executors x cores)
-    is only known once the session exists."""
-    from pgstosrt_spark.session import TASKS_PER_SLOT
-
-    slots = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.files.minPartitionNum", str(TASKS_PER_SLOT * slots))
 
 
 def main() -> None:
@@ -62,11 +41,14 @@ def main() -> None:
     args = ap.parse_args()
 
     # imports resolve from --py-files on driver AND executors
+    from pyspark.sql import SparkSession
+
     from pgstosrt_spark.metrics import committed_batches, run_with_checkpoints
+    from pgstosrt_spark.session import workload_session
     from pgstosrt_spark.sources.tables import read_documents
 
-    spark = build_session("pgstosrt-extract")
-    _tune_scan_parallelism(spark)
+    # master/executors come from spark-submit; these are workload confs only
+    spark = workload_session(SparkSession.builder.appName("pgstosrt-extract"))
     docs = read_documents(spark, args.input)
     committed = run_with_checkpoints(
         spark,

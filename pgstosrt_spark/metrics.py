@@ -88,22 +88,14 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def _spark_for_fs(spark: SparkSession | None) -> SparkSession | None:
-    return spark if spark is not None else SparkSession.getActiveSession()
-
-
 def committed_batches(out_dir: str, spark: SparkSession | None = None) -> list[int]:
-    spark = _spark_for_fs(spark)
-    if spark is None:  # no JVM available: driver-local POSIX fallback
-        mdir = os.path.join(out_dir, "_manifest")
-        if not os.path.isdir(mdir):
-            return []
-        names = os.listdir(mdir)
-    else:
-        fs, mdir_p = _hadoop_fs(spark, out_dir + "/_manifest")
-        if not fs.exists(mdir_p):
-            return []
-        names = [st.getPath().getName() for st in fs.listStatus(mdir_p)]
+    """Sorted ids of the batches with a manifest record under ``out_dir``,
+    listed through the Hadoop FS of ``spark`` (default: the active
+    session)."""
+    fs, mdir_p = _hadoop_fs(spark or SparkSession.active(), out_dir + "/_manifest")
+    if not fs.exists(mdir_p):
+        return []
+    names = [st.getPath().getName() for st in fs.listStatus(mdir_p)]
     return sorted(
         int(f[:-5]) for f in names if f.endswith(".json") and not f.startswith(".")
     )

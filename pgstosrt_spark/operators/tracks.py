@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pgs.ebml import PGS_CODEC_ID
+
 __all__ = ["TRACKS_SCHEMA", "pgs_tracks", "tracks_by_language"]
 
 TRACKS_SCHEMA = (
@@ -41,19 +43,15 @@ TRACKS_SCHEMA = (
     "language string, is_forced boolean"
 )
 
-_PGS_CODEC = "s_hdmv/pgs"
-
 
 def pgs_tracks(tracks: DataFrame) -> DataFrame:
     """PGS subtitle tracks in track order (MkvUtilities.cs:98-115).
 
-    The reference compares CodecId with string.Equals (case-sensitive for
-    the codec id itself; Matroska codec ids are canonical upper) — we
-    match case-insensitively, which is a superset on malformed files.
+    The codec id matches ``ebml.PGS_CODEC_ID`` exactly, as in the reference
+    (string.Equals) and the demux (``ebml.mkv_pgs_packets``): a track the
+    demux would not decode is not fanned out either.
     """
-    return tracks.filter(F.lower(F.col("codec_id")) == _PGS_CODEC).orderBy(
-        "track_number"
-    )
+    return tracks.filter(F.col("codec_id") == PGS_CODEC_ID).orderBy("track_number")
 
 
 def _fanout_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -20,7 +20,6 @@ __all__ = [
     "ADVANCE",
     "SPACE_ADVANCE",
     "atlas",
-    "match_glyph",
     "packed_atlas",
 ]
 
@@ -83,10 +82,8 @@ FONT: dict[str, tuple[str, ...]] = {
     ")": (".#...", "..#..", "...#.", "...#.", "...#.", "..#..", ".#..."),
     "/": ("....#", "....#", "...#.", "..#..", ".#...", "#....", "#...."),
     ">": ("#....", ".#...", "..#..", "...#.", "..#..", ".#...", "#...."),
-    "0x26": ("", ""),  # placeholder slot, unused
 }
 # fmt: on
-del FONT["0x26"]
 
 
 @lru_cache(maxsize=1)
@@ -108,30 +105,11 @@ def _crop(arr: np.ndarray) -> np.ndarray:
     return arr[rows[0] : rows[-1] + 1, cols[0] : cols[-1] + 1]
 
 
-@lru_cache(maxsize=1)
-def cropped_atlas() -> dict[bytes, str]:
-    """Cropped-bitmap bytes -> char, for registration-free matching."""
-    out: dict[bytes, str] = {}
-    for ch, arr in atlas().items():
-        key = _crop(arr).tobytes() + bytes(_crop(arr).shape)
-        assert key not in out, f"cropped glyph collision: {ch} vs {out[key]}"
-        out[key] = ch
-    return out
-
-
-def match_glyph(cell: np.ndarray) -> str:
-    """(h, w) {0,1} cell -> char, or '?' when unknown."""
-    if not cell.any():
-        return "?"
-    c = _crop(cell)
-    return cropped_atlas().get(c.tobytes() + bytes(c.shape), "?")
-
-
 def _pack_cols(arr: np.ndarray) -> tuple[int, ...]:
     """Column-integer encoding of a column-cropped bitmap: column c maps to
     sum of (arr[r, c] << r), then every column is right-shifted by the
     bottom-most set row (row crop).  Bijective with the cropped bitmap +
-    width, so key uniqueness is identical to ``cropped_atlas``."""
+    width, so distinct cropped glyphs get distinct keys."""
     h = arr.shape[0]
     vals = (arr.astype(np.int64) << np.arange(h, dtype=np.int64)[:, None]).sum(axis=0)
     orv = 0

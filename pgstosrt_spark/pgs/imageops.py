@@ -33,7 +33,6 @@ def non_transparent_width(rgba: np.ndarray) -> int:
 
 
 def images_equal(a: np.ndarray, b: np.ndarray) -> bool:
-    """Dimension check + flat RGBA compare (ImageExtensions.cs:72-92)."""
-    if a.shape != b.shape:
-        return False
-    return bool(np.array_equal(a, b))
+    """Dimension check + flat RGBA compare (ImageExtensions.cs:72-92):
+    ``np.array_equal`` is False on a shape mismatch."""
+    return np.array_equal(a, b)

@@ -74,6 +74,7 @@ _TOKEN = re.compile(
 )
 _EOL = b"\x00\x00"
 _COLOURS = np.arange(256, dtype=np.int16)
+_CLEAR = np.zeros((1, 4), dtype=np.uint8)
 
 
 def _run(token: bytes) -> tuple[int, bytes]:
@@ -343,10 +344,8 @@ def decode_image(
     if mask:
         return (idx >= 0).reshape(height, width)
 
-    rgba = np.zeros((height * width, 4), dtype=np.uint8)
-    written = idx >= 0
-    rgba[written] = lut[idx[written].astype(np.int32)]
-    rgba = rgba.reshape(height, width, 4)
+    # one gather: index -1 (never written) reads the appended transparent row
+    rgba = np.concatenate((lut, _CLEAR))[idx].reshape(height, width, 4)
     return pad_image(rgba) if pad else rgba
 
 

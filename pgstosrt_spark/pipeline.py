@@ -27,17 +27,23 @@ Scale notes (100 TB / 10^12 docs):
   * the explode and unbase64 are narrow — no shuffle; column pruning
     pushes the parquet/Iceberg scan down to (doc_id, spans);
   * the only required shuffle is the fold's groupBy(doc_id) of *small*
-    string rows (payload bytes never shuffle in fused mode); text spans
-    cross into the Python worker and back, which costs far less than the
-    second scan and branch they replace;
+    string rows; text spans cross into the Python worker and back, which
+    costs far less than the second scan and branch they replace;
   * ``mode='two_phase'`` adds one rebalance shuffle of parsed compositions
     (text rows ride it) so skewed payloads fan out before the expensive
     decode+OCR (north_rule skew).  The shuffled rows are pickled
     ``PcsData`` and are *not* smaller than the payloads: 22.3 MB pickled
     vs 20.5 MB raw for the 17,627 compositions of 3,000 sf0.1 docs;
   * an input with fewer than 4x slots partitions (many payloads in few
-    files) is hash-repartitioned to 4x slots before the kernel; no option
-    changes the width or the gate.
+    files) is hash-repartitioned to 4x slots before the kernel, and then
+    payload bytes do shuffle, in fused mode too; no option changes the
+    width or the gate.  That is accepted: the scan was asked for 4x slots
+    splits and made fewer (a few small files, or a coalesced DataFrame),
+    and without the rebalance a few tasks would decode every payload on a
+    few cores.  Traced on a 4-core VM, ``pipeline.shuffle_write_bytes`` is
+    1,408,895 on extractbench ``skew`` (4 one-doc files, rebalanced)
+    against 341,798 on ``uniform`` (16 files, the fold alone).  Input the
+    scan can split never shuffles payload bytes in fused mode.
 """
 
 from __future__ import annotations
@@ -53,7 +59,7 @@ from .kernels import (
     make_parse_kernel,
 )
 from .pgs.ocr import OcrBackend
-from .session import TASKS_PER_SLOT
+from .session import kernel_tasks
 
 __all__ = [
     "extract_cue_rows",
@@ -92,7 +98,7 @@ def _kernel_rows(
 
     The kernels are CPU-bound per *row* (per composition in two-phase),
     which byte-based file splits and AQE's byte-based coalescing cannot
-    see, so both stages run on ``TASKS_PER_SLOT * slots`` partitions (4 per
+    see, so both stages run on ``session.kernel_tasks`` partitions (4 per
     slot): several units per slot let dynamic scheduling absorb per-row
     cost variance and executor speed skew.  The span rows are rebalanced
     only when the input has fewer partitions than that.  The session
@@ -106,7 +112,7 @@ def _kernel_rows(
     """
     if mode not in ("fused", "two_phase"):
         raise ValueError(f"unknown mode: {mode!r} (fused | two_phase)")
-    width = TASKS_PER_SLOT * rows.sparkSession.sparkContext.defaultParallelism
+    width = kernel_tasks(rows.sparkSession)
     if rows.rdd.getNumPartitions() < width:
         rows = rows.repartition(width, F.col("doc_id"), F.col("offset"))
     if mode == "fused":

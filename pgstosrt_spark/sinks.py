@@ -27,18 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["write_srt_files", "safe_srt_name"]
+__all__ = ["write_srt_files"]
 
 _UNSAFE = re.compile(r"[^A-Za-z0-9._-]+")
-
-
-def safe_srt_name(doc_id: str, media_ref: str) -> str:
-    """``<doc_id>.<media_ref>.srt`` with path-hostile characters collapsed
-    to ``_`` (the reference dedups colliding output names with numeric
-    suffixes, MkvUtilities.cs:20-48; (doc_id, media_ref) is unique here so
-    sanitization alone cannot collide distinct spans unless ids differ
-    only in unsafe characters — the writer fails loudly in that case)."""
-    return f"{_UNSAFE.sub('_', doc_id)}.{_UNSAFE.sub('_', media_ref)}.srt"
 
 
 def write_srt_files(rendered: DataFrame, out_dir: str) -> DataFrame:

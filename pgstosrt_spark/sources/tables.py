@@ -33,20 +33,6 @@ DOCUMENTS_SCHEMA = T.StructType(
     ]
 )
 
-# driver-generated TPC-H-ish tables (TESTDATA.md)
-DRIVER_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_documents(spark: SparkSession, source: str) -> DataFrame:
     """Interleaved documents table: Iceberg table name or parquet path."""
@@ -56,14 +42,3 @@ def read_documents(spark: SparkSession, source: str) -> DataFrame:
         except Exception:
             pass
     return spark.read.schema(DOCUMENTS_SCHEMA).parquet(source)
-
-
-def load_driver_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One driver test table (parquet schemas are self-describing and the
-    driver's own DDL is authoritative, so no redeclaration here)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_driver_tables(spark: SparkSession, sf_dir: str) -> None:
-    for name in DRIVER_TABLES:
-        load_driver_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -410,9 +410,10 @@ def test_embedding_near_dup_hot_cell_cap(spark, emb):
 
 
 def test_track_fanout_numbering(spark):
-    """MkvUtilities.cs:20-55 contract: PGS-codec filter, case-insensitive
-    language match, output names numbered "", 2, 3 on collision (the
-    reference's retry loop starts at 2), .forced suffix kept distinct."""
+    """MkvUtilities.cs:20-55 contract: exact PGS-codec filter (as in the
+    demux, ebml.mkv_pgs_packets), case-insensitive language match, output
+    names numbered "", 2, 3 on collision (the reference's retry loop
+    starts at 2), .forced suffix kept distinct."""
     from pgstosrt_spark.operators.tracks import tracks_by_language
 
     rows = [
@@ -423,6 +424,7 @@ def test_track_fanout_numbering(spark):
         ("movie", 5, "S_TEXT/UTF8", "eng", False),  # wrong codec: dropped
         ("movie", 6, "S_HDMV/PGS", "fre", False),   # wrong language: dropped
         ("other", 7, "S_HDMV/PGS", "eng", False),   # different source file
+        ("movie", 8, "s_hdmv/pgs", "eng", False),   # not decoded: dropped
     ]
     tracks = spark.createDataFrame(
         rows, "source string, track_number long, codec_id string, language string, is_forced boolean"

@@ -44,10 +44,11 @@ def times(payload: bytes, **kw) -> list[str]:
 
 
 def test_glyph_atlas_cropped_patterns_unique():
-    # registration-free OCR requires unique cropped bitmaps
-    from pgstosrt_spark.pgs.glyphs import cropped_atlas
+    # registration-free OCR requires unique cropped bitmaps; the packed
+    # atlas the OCR reads keys each glyph by its cropped bitmap
+    from pgstosrt_spark.pgs.glyphs import packed_atlas
 
-    assert len(cropped_atlas()) == len(glyphs.FONT)
+    assert len(packed_atlas()) == len(glyphs.FONT)
 
 
 def test_language_data_discovery(tmp_path):
@@ -408,6 +409,7 @@ def test_non_transparent_extent():
     assert non_transparent_height(np.zeros((5, 5, 4), dtype=np.uint8)) == 0
     assert images_equal(img, img.copy())
     assert not images_equal(img, np.zeros_like(img))
+    assert not images_equal(img, img[:, :10])
 
 
 def test_rle_overfilled_row_overlap_replay():

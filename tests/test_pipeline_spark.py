@@ -457,3 +457,25 @@ def test_extract_takes_mode_and_backend_only(spark, small_docs):
     docs, _rows = small_docs
     with pytest.raises(ValueError, match="size_bucketed"):
         extract(docs, mode="size_bucketed")
+
+
+def test_workload_session_policy(spark):
+    """One session policy for get_spark and the spark-submit job: every
+    WORKLOAD_CONF value, and the scan split floor ``minPartitionNum`` at
+    ``kernel_tasks`` = TASKS_PER_SLOT x slots, re-applied on every call."""
+    from pyspark.sql import SparkSession
+
+    from pgstosrt_spark.session import (
+        TASKS_PER_SLOT,
+        WORKLOAD_CONF,
+        kernel_tasks,
+        workload_session,
+    )
+
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    s = workload_session(SparkSession.builder)
+    assert s is spark
+    assert kernel_tasks(s) == TASKS_PER_SLOT * s.sparkContext.defaultParallelism == 32
+    assert s.conf.get("spark.sql.files.minPartitionNum") == str(kernel_tasks(s))
+    for key, value in WORKLOAD_CONF.items():
+        assert s.conf.get(key) == value, key

@@ -74,6 +74,40 @@ def test_mask_and_rgba_recognize_alike(variant, fix):
         assert np.array_equal(alpha, m)
 
 
+def _masked_gather(lut: np.ndarray, idx: np.ndarray, h: int, w: int) -> np.ndarray:
+    """Reference RGBA: a zero canvas written through the ``idx >= 0`` mask."""
+    rgba = np.zeros((h * w, 4), dtype=np.uint8)
+    written = idx >= 0
+    rgba[written] = lut[idx[written]]
+    return rgba.reshape(h, w, 4)
+
+
+@pytest.mark.parametrize("variant", range(N_VARIANTS))
+def test_rgba_gather_matches_masked_reference(variant):
+    """decode_image's one gather (index -1 reads an appended transparent
+    row) is byte-identical to the masked reference, on the payload's own
+    palette and on a random 256-entry one (alpha 0 entries included)."""
+    rng = np.random.default_rng(variant)
+    entries = rng.integers(0, 256, (256, 5), dtype=np.uint8)
+    entries[:, 0] = np.arange(256)
+    entries[::3, 4] = 0
+    random_palette = [PaletteInfo(size=256, buffer=entries.tobytes())]
+    checked = 0
+    for pcs in decode_to_display_sets(_media_payload(CUES, variant)):
+        for obj, frags in zip(pcs.pcs_objects or [], pcs.bitmap_objects or []):
+            ods = frags[0]
+            for palettes in (pcs.palette_infos, random_palette):
+                lut = decode_palette(palettes)
+                idx = decode_rle_runs(ods.data, ods.width, ods.height, alpha_lut=lut[:, 3])
+                ref = _masked_gather(lut, idx, ods.height, ods.width)
+                got = rle.decode_image(obj, frags, palettes, pad=False)
+                assert got.dtype == np.uint8 and np.array_equal(got, ref)
+                padded = rle.decode_image(obj, frags, palettes)
+                assert np.array_equal(padded, rle.pad_image(ref))
+                checked += 1
+    assert checked
+
+
 @pytest.mark.parametrize("variant", range(N_VARIANTS))
 def test_backend_without_attribute_gets_padded_rgba(variant):
     sets = decode_to_display_sets(_media_payload(CUES, variant))
