@@ -205,14 +205,14 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------- extraction
 
 
-def _extract_flat(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
+def _extract_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize the interleaved corpus from the driver text docs, run the
     extraction pipeline, return flat exploded output spans."""
     from pgstosrt_spark.fixtures.corpus import synthesize_documents
     from pgstosrt_spark.pipeline import extract
 
     docs = synthesize_documents(_utc(spark), sf_dir)
-    extracted = extract(docs, mode=mode)
+    extracted = extract(docs)
     return extracted.select(
         "doc_id", F.posexplode("spans").alias("pos", "span")
     ).select(
@@ -227,15 +227,7 @@ def _extract_flat(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full PGS extraction over the interleaved corpus at sf0.001."""
-    return _extract_flat(spark, SF_SMOKE, mode="fused")
-
-
-def _q_extract_fused(spark, sf_dir):
-    return _extract_flat(spark, sf_dir, mode="fused")
-
-
-def _q_extract_two_phase(spark, sf_dir):
-    return _extract_flat(spark, sf_dir, mode="two_phase")
+    return _extract_flat(spark, SF_SMOKE)
 
 
 def _q_extract_metrics(spark, sf_dir):
@@ -350,8 +342,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # extraction pipeline (binary kernels -> rows-only driver check;
         # value-level equality vs the pure-Python oracle is pinned in tests/)
-        "extract_interleaved": _q_extract_fused,
-        "extract_two_phase": _q_extract_two_phase,
+        "extract_interleaved": _extract_flat,
         "extract_metrics": _q_extract_metrics,
         "srt_render": _q_srt_render,
         "srt_format": _q_srt_format,
@@ -560,10 +551,7 @@ def oracle_sql() -> dict[str, str]:
 
     return {
         # flagship: the full binary extraction pipeline vs pure string math
-        # (both modes produce identical output by construction — the mode
-        # only changes the physical plan, so both get the same twin)
         "extract_interleaved": _EXTRACT_ORACLE,
-        "extract_two_phase": _EXTRACT_ORACLE,
         "pricing_summary": f"""
             SELECT l_returnflag, l_linestatus,
                    CAST(sum({qty}) AS DOUBLE) AS sum_qty,

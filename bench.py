@@ -21,9 +21,8 @@ upper bound on the true runtime; interleaving keeps a burst from landing on
 one query only.  The benchmark of record is ``extractbench/run.py``, whose
 ``cpu_s`` resists host noise; this line is the driver's wide view.
 
-A "skew" section times fused vs two_phase on the skew shapes — one doc
-with 10^3 media spans plus $SPARK_GRAFT_REPLICATE multi-MB single-span
-payloads — where the two-phase composition fan-out is the designed win
+A "skew" section times the extraction on the skew shapes — one doc with
+10^3 media spans plus $SPARK_GRAFT_REPLICATE multi-MB single-span payloads
 (SURVEY.md §4.3.1).
 
 Per-query sample lists go to a sidecar file (default
@@ -156,7 +155,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
 
     import __spark_entry__ as entrymod
     from pgstosrt_spark.pipeline import extract
-    from pgstosrt_spark.session import get_spark, kernel_tasks
+    from pgstosrt_spark.session import get_spark
     from pgstosrt_spark.sources.tables import read_documents
 
     spark = get_spark("pgstosrt-bench", cpus=cpus)
@@ -174,29 +173,24 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     qdefs = entrymod.queries()
 
     # warm the JVM + Python workers on a small slice, then ONE unrecorded
-    # full pass per headliner mode: the first full extraction otherwise
+    # full pass: the first full extraction otherwise
     # pays corpus page-cache population (measured ~2.5x: 20.9s cold vs
     # 8.5s warm), an artifact of the cold FS cache that a long-running
     # production job never sees.  The record says so: warm_full_pass.
     _noop(extract(docs.limit(64)))
-    for _mode in ("fused", "two_phase"):
-        _noop(extract(docs, mode=_mode))
+    _noop(extract(docs))
 
     thunks: list[tuple[str, object]] = [
-        ("extract_fused", lambda: _noop(extract(docs, mode="fused"))),
-        ("extract_two_phase", lambda: _noop(extract(docs, mode="two_phase"))),
+        ("extract_fused", lambda: _noop(extract(docs))),
     ] + [
         (name, lambda name=name: _noop(qdefs[name](spark, sf_dir)))
         for name in DRIVER_QUERIES
     ]
     timings, samples = _measure(thunks)
 
-    # ---- skew section: the two-phase escape hatch must WIN here --------
+    # ---- skew section ---------------------------------------------------
     skew_timings, skew_samples = _measure(
-        [
-            ("skew_fused", lambda: _noop(extract(skew_docs, mode="fused"))),
-            ("skew_two_phase", lambda: _noop(extract(skew_docs, mode="two_phase"))),
-        ]
+        [("skew_fused", lambda: _noop(extract(skew_docs)))]
     )
 
     extract_sec = timings["extract_fused"]
@@ -211,8 +205,8 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         "docs": n_docs,
         "docs_per_sec": round(n_docs / extract_sec, 1) if extract_sec else None,
         "cpus": cpus,
-        # every sample follows one unrecorded full pass per extraction mode
-        # (see the warm-up above): the timings are warm page-cache timings
+        # every sample follows one unrecorded full extraction pass (see
+        # the warm-up above): the timings are warm page-cache timings
         "warm_full_pass": True,
         "samples": samples,
         "skew": {
@@ -221,7 +215,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
             "span (12k compositions each)",
             "queries": skew_timings,
             "samples": skew_samples,
-            "two_phase_default_width": kernel_tasks(spark),
         },
     }
     spark.stop()
@@ -232,9 +225,7 @@ def _compact(result: dict, detail_file: str) -> str:
     """The printed line: ``result`` without its sample lists and skew
     shapes, plus the name of the detail file that holds them."""
     line = {k: v for k, v in result.items() if k not in ("samples", "skew")}
-    line["skew"] = {
-        k: result["skew"][k] for k in ("docs", "queries", "two_phase_default_width")
-    }
+    line["skew"] = {k: result["skew"][k] for k in ("docs", "queries")}
     line["detail_file"] = detail_file
     return json.dumps(line)
 

@@ -9,7 +9,6 @@ Ships per the north_rule's submission contract:
         jobs/extract_job.py \
         --input  <iceberg/parquet table of documents(doc_id, spans)> \
         --output <output dir> \
-        [--mode fused|two_phase] \
         [--n-batches 64] [--max-batches N]
 
 The job is self-contained on the executors: everything it imports beyond
@@ -35,7 +34,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="documents table (parquet dir)")
     ap.add_argument("--output", required=True, help="checkpointed output dir")
-    ap.add_argument("--mode", default="fused", choices=["fused", "two_phase"])
     ap.add_argument("--n-batches", type=int, default=64)
     ap.add_argument("--max-batches", type=int, default=None)
     args = ap.parse_args()
@@ -55,7 +53,6 @@ def main() -> None:
         docs,
         args.output,
         n_batches=args.n_batches,
-        mode=args.mode,
         max_batches=args.max_batches,
     )
     print(

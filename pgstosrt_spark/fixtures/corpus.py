@@ -210,9 +210,8 @@ def synthesize_skewed_documents(
         skew: the final groupBy(doc_id) folds 10^3 spans into one row;
       * ``n_monster_docs`` documents of ONE multi-MB media span each
         (``monster_cues`` compositions, ~400 B/display-set -> ~5 MB of
-        payload): span-level skew, where a fused kernel pins one task per
-        payload for the whole decode+OCR and the two-phase rebalance is
-        the designed escape hatch (SURVEY.md §4.3.1).
+        payload): span-level skew, where the kernel pins one task per
+        payload for the whole decode+OCR (SURVEY.md §4.3.1).
 
     Payloads are encoder-built on executors (one task per monster doc /
     wide-span slice), never on the driver.

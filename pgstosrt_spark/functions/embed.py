@@ -30,24 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens_col
+from .text import ngrams_col
 
-__all__ = ["ngrams_col", "embed_text"]
-
-
-def ngrams_col(n: int = 4, col: str = "text"):
-    """RAW (non-distinct) word n-grams — unlike dedup.shingles_col, counts
-    matter here, so duplicates are kept.  Same zip_with-over-slices build
-    (each slice evaluated once per row; see shingles_col's perf note)."""
-    toks = tokens_col(col)
-    n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    parts = [F.slice(toks, i + 1, n_sh) for i in range(n)]
-    combined = parts[0]
-    for p in parts[1:]:
-        combined = F.zip_with(combined, p, lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(F.size(toks) >= n, combined).otherwise(
-        F.array().cast("array<string>")
-    )
+__all__ = ["embed_text"]
 
 
 def embed_text(

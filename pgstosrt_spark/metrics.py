@@ -42,15 +42,14 @@ __all__ = [
 
 
 def partition_lineage(side: DataFrame) -> DataFrame:
-    """Aggregate the kernels' ``_metric`` side-channel into per-physical-
+    """Aggregate the kernel's ``_metric`` side-channel into per-physical-
     partition lineage rows (north_rule: per-partition lineage + metrics):
 
         part, n_payloads, n_comps, n_bytes, wall_ms, n_errors
 
     ``n_comps`` counts merged display sets (each one cue or one ``_error``
-    row), ``wall_ms`` the payloads' time in the kernel that parsed them;
-    both plans write the same ``kernels.METRIC_SCHEMA`` record, so the
-    rows mean the same in either mode.  One narrow JSON projection + one
+    row), ``wall_ms`` the payloads' time in the kernel, as
+    ``kernels.METRIC_SCHEMA`` records them.  One narrow JSON projection + one
     tiny groupBy — the metric rows are a few hundred bytes each regardless
     of payload size, so this aggregates cheaply even when the extraction
     itself processed terabytes.
@@ -139,7 +138,6 @@ def run_with_checkpoints(
     documents: DataFrame,
     out_dir: str,
     n_batches: int = 8,
-    mode: str = "fused",
     max_batches: int | None = None,
 ) -> list[int]:
     """Extract with per-batch snapshot commits; idempotent on re-run.
@@ -160,7 +158,7 @@ def run_with_checkpoints(
         # one scan, kernel runs once: the flat span rows (text included)
         # are cached and feed both the extracted table and the metrics
         # side-channel
-        flat = _kernel_rows(_span_rows(batch_docs), mode).cache()
+        flat = _kernel_rows(_span_rows(batch_docs)).cache()
         try:
             _cues, side = split_side_channel(flat)
             extracted = _fold(flat)
@@ -184,7 +182,6 @@ def run_with_checkpoints(
                 "n_docs": n_docs,
                 "n_metric_rows": n_side,
                 "wall_s": round(time.perf_counter() - t0, 3),
-                "mode": mode,
             },
         )
         committed_now.append(batch_id)

@@ -65,8 +65,11 @@ def probe_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     PGS payloads are probed for real (canvas dims from the first PCS,
     display-set count); foreign formats yield nulls — their decoders are
-    the stubbed step."""
-    from .pgs.model import SEG_PCS
+    the stubbed step.  A container header too short to hold its count
+    probes as ``n_units = 0`` instead of failing the task."""
+    from .pgs.decode import MKV_MAGIC
+    from .pgs.ebml import EBML_MAGIC, mkv_pgs_packets
+    from .pgs.model import SEG_PCS, DecodeError
     from .pgs.segments import split_segments_sup
 
     for pdf in batches:
@@ -85,13 +88,11 @@ def probe_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                                 struct.unpack(">H", seg.payload[2:4])[0],
                             )
                         n_units += 1
-            elif data[:4] == b"MKPG":
+            elif data[:4] == MKV_MAGIC:
                 mtype = "pgs-mkv"
-                n_units = struct.unpack(">I", data[4:8])[0]
-            elif data[:4] == b"\x1a\x45\xdf\xa3":
-                from .pgs.ebml import mkv_pgs_packets
-                from .pgs.model import DecodeError
-
+                if len(data) >= 8:
+                    n_units = struct.unpack(">I", data[4:8])[0]
+            elif data[:4] == EBML_MAGIC:
                 mtype = "mkv"
                 try:
                     n_units = len(mkv_pgs_packets(data))

@@ -2,10 +2,9 @@
 
 This is the pure-Python composition of the whole reference pipeline
 (SURVEY.md §3): segment walk -> display-set assembly -> duplicate merge ->
-rasterize -> OCR -> ordered cues.  The Spark kernels (kernels.py) call
-exactly this code: the fused kernel per media payload, the two-phase
-kernels split it at the merged display sets; tests compare Spark output
-against it.
+rasterize -> OCR -> ordered cues.  The Spark kernel (kernels.py) calls
+exactly this code, :func:`decode_media_payload` once per media payload;
+tests compare Spark output against it.
 
 Media payload framing (fixture encoder, FIXTURES.md §1):
   * ``PG...``       — a standalone .sup byte stream (13-byte headers);
@@ -36,7 +35,6 @@ __all__ = [
     "MKV_MAGIC",
     "decode_media_payload",
     "decode_to_display_sets",
-    "display_sets_to_cue_rows",
     "display_sets_to_cues",
     "pack_mkv_packets",
     "unpack_mkv_packets",
@@ -101,10 +99,9 @@ def display_sets_to_cues(
     The reference drops items whose decode/OCR throws anything
     (PgsOcr.cs:103-106, a per-item catch); we do the same on the output
     sequence (the dropped ``seq`` is absent), and append ``(seq, exc)`` to
-    ``errors`` when it is given, so the fused kernel can emit an
-    ``_error`` row per dropped composition, as two-phase does.  A backend
-    with ``wants_mask`` gets the unpadded opacity mask instead of the RGBA
-    canvas (compose.py).
+    ``errors`` when it is given, so the kernel can emit an ``_error`` row
+    per dropped composition.  A backend with ``wants_mask`` gets the
+    unpadded opacity mask instead of the RGBA canvas (compose.py).
     """
     backend = backend or default_backend()
     mask = wants_mask(backend)
@@ -123,18 +120,6 @@ def display_sets_to_cues(
     return cues
 
 
-def display_sets_to_cue_rows(
-    sets: list[PcsData],
-    backend: OcrBackend | None = None,
-    multi_object_opacity_fix: bool = False,
-    errors: list[tuple[int, Exception]] | None = None,
-) -> list[tuple[int, str]]:
-    """Display sets -> [(seq, cue_text)]: :func:`display_sets_to_cues` with
-    each cue rendered as its span text (the timecodes embedded)."""
-    cues = display_sets_to_cues(sets, backend, multi_object_opacity_fix, errors)
-    return [(c.seq, cue_text(c.start, c.end, c.text)) for c in cues]
-
-
 def decode_media_payload(
     payload: bytes,
     backend: OcrBackend | None = None,
@@ -148,12 +133,8 @@ def decode_media_payload(
     This is the per-media-span contract of the engine: each media span is
     replaced by one 'cue' span per merged composition (FIXTURES.md §2).
     Dropped compositions go to ``errors`` (see display_sets_to_cues).
-
-    The fused kernel calls this once per payload.  The two-phase plan runs
-    the same two steps apart: its parse kernel calls
-    :func:`decode_to_display_sets` per payload, and after the rebalance
-    its OCR kernel calls :func:`display_sets_to_cue_rows` (hence
-    :func:`display_sets_to_cues`) once per composition.
+    The kernel calls this once per payload.
     """
     sets = decode_to_display_sets(payload, skip_merge, force_merge_all)
-    return display_sets_to_cue_rows(sets, backend, multi_object_opacity_fix, errors)
+    cues = display_sets_to_cues(sets, backend, multi_object_opacity_fix, errors)
+    return [(c.seq, cue_text(c.start, c.end, c.text)) for c in cues]

@@ -5,7 +5,7 @@
                                            │ payload = unbase64(text) for
                                            │ media spans only (JVM-side)
                                            ▼
-                      mapInPandas extraction kernel(s)
+                      mapInPandas extraction kernel
                                            │ media -> cue + _metric/_error
                                            │ rows; every other row passes
                                            ▼ through (seq 0)
@@ -29,21 +29,18 @@ Scale notes (100 TB / 10^12 docs):
   * the only required shuffle is the fold's groupBy(doc_id) of *small*
     string rows; text spans cross into the Python worker and back, which
     costs far less than the second scan and branch they replace;
-  * ``mode='two_phase'`` adds one rebalance shuffle of parsed compositions
-    (text rows ride it) so skewed payloads fan out before the expensive
-    decode+OCR (north_rule skew).  The shuffled rows are pickled
-    ``PcsData`` and are *not* smaller than the payloads: 22.3 MB pickled
-    vs 20.5 MB raw for the 17,627 compositions of 3,000 sf0.1 docs;
   * an input with fewer than 4x slots partitions (many payloads in few
     files) is hash-repartitioned to 4x slots before the kernel, and then
-    payload bytes do shuffle, in fused mode too; no option changes the
-    width or the gate.  That is accepted: the scan was asked for 4x slots
-    splits and made fewer (a few small files, or a coalesced DataFrame),
+    payload bytes do shuffle; no option changes the width or the gate.
+    That is accepted: the scan was asked for 4x slots splits and made
+    fewer (a few small files, or a coalesced DataFrame),
     and without the rebalance a few tasks would decode every payload on a
     few cores.  Traced on a 4-core VM, ``pipeline.shuffle_write_bytes`` is
     1,408,895 on extractbench ``skew`` (4 one-doc files, rebalanced)
     against 341,798 on ``uniform`` (16 files, the fold alone).  Input the
-    scan can split never shuffles payload bytes in fused mode.
+    scan can split never shuffles payload bytes.  This rebalance is the
+    plan's skew handling: at ~200-250 us per composition, even a
+    12k-composition payload is a few seconds of work for one task.
 """
 
 from __future__ import annotations
@@ -51,13 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .kernels import (
-    COMP_SCHEMA,
-    CUE_SCHEMA,
-    make_fused_kernel,
-    make_ocr_kernel,
-    make_parse_kernel,
-)
+from .kernels import CUE_SCHEMA, make_fused_kernel
 from .pgs.ocr import OcrBackend
 from .session import kernel_tasks
 
@@ -90,51 +81,35 @@ def _span_rows(documents: DataFrame) -> DataFrame:
     )
 
 
-def _kernel_rows(
-    rows: DataFrame, mode: str = "fused", backend: OcrBackend | None = None
-) -> DataFrame:
+def _kernel_rows(rows: DataFrame, backend: OcrBackend | None = None) -> DataFrame:
     """Span rows -> flat ``CUE_SCHEMA`` rows: each media row becomes its
     cue/metric/error rows, every other row passes through with ``seq`` 0.
 
-    The kernels are CPU-bound per *row* (per composition in two-phase),
-    which byte-based file splits and AQE's byte-based coalescing cannot
-    see, so both stages run on ``session.kernel_tasks`` partitions (4 per
-    slot): several units per slot let dynamic scheduling absorb per-row
-    cost variance and executor speed skew.  The span rows are rebalanced
+    The kernel is CPU-bound per *row*, which byte-based file splits and
+    AQE's byte-based coalescing cannot see, so it runs on
+    ``session.kernel_tasks`` partitions (4 per slot): several units per
+    slot let dynamic scheduling absorb per-row cost variance and executor
+    speed skew.  The span rows are rebalanced
     only when the input has fewer partitions than that.  The session
     already asks the scan for that many splits
     (``spark.sql.files.minPartitionNum``), so this fires only for input the
     scan cannot split; at production scale payload bytes never shuffle.
-    Rebalances hash on keys unique per row, NOT round-robin: plain
+    The rebalance hashes on keys unique per row, NOT round-robin: plain
     ``repartition(n)`` local-sorts every column first
     (``spark.sql.execution.sortBeforeRepartition``), which is
-    pathological for multi-KB payloads and pickled compositions.
+    pathological for multi-KB payloads.
     """
-    if mode not in ("fused", "two_phase"):
-        raise ValueError(f"unknown mode: {mode!r} (fused | two_phase)")
     width = kernel_tasks(rows.sparkSession)
     if rows.rdd.getNumPartitions() < width:
         rows = rows.repartition(width, F.col("doc_id"), F.col("offset"))
-    if mode == "fused":
-        return rows.mapInPandas(make_fused_kernel(backend), schema=CUE_SCHEMA)
-    # two_phase: ALL rows ride the one composition rebalance — the tiny
-    # _metric/_error side channel and the text rows pass through the OCR
-    # kernel unchanged instead of a second filter branch, which (uncached)
-    # would re-execute the whole parse kernel.
-    comps = rows.mapInPandas(make_parse_kernel(), schema=COMP_SCHEMA)
-    return comps.repartition(
-        width, F.col("doc_id"), F.col("offset"), F.col("seq")
-    ).mapInPandas(make_ocr_kernel(backend), schema=CUE_SCHEMA)
+    return rows.mapInPandas(make_fused_kernel(backend), schema=CUE_SCHEMA)
 
 
-def extract_cue_rows(
-    documents: DataFrame, mode: str = "fused", backend: OcrBackend | None = None
-) -> DataFrame:
+def extract_cue_rows(documents: DataFrame, backend: OcrBackend | None = None) -> DataFrame:
     """Media spans -> cue/metric/error rows (flat), pre-re-aggregation:
-    the kernels of :func:`extract` over the media rows only."""
-    return _kernel_rows(
-        _span_rows(documents).filter(F.col("kind") == "media"), mode, backend
-    )
+    the kernel of :func:`extract` over the media rows only."""
+    media = _span_rows(documents).filter(F.col("kind") == "media")
+    return _kernel_rows(media, backend)
 
 
 def split_side_channel(cue_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -146,7 +121,7 @@ def split_side_channel(cue_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def _is_output_span() -> Column:
-    """The flat rows that become output spans: text spans and the kernels'
+    """The flat rows that become output spans: text spans and the kernel's
     cues.  Cues carry ``seq`` >= 1; an input span of kind 'cue' passes
     through with ``seq`` 0 and, like every other unknown kind, is dropped."""
     kind = F.col("kind")
@@ -234,19 +209,14 @@ def render_srt_documents(documents: DataFrame) -> DataFrame:
     return render_srt_cues(cues)
 
 
-def extract(
-    documents: DataFrame,
-    mode: str = "fused",
-    backend: OcrBackend | None = None,
-) -> DataFrame:
+def extract(documents: DataFrame, backend: OcrBackend | None = None) -> DataFrame:
     """Full pipeline: documents -> extracted (same shape, FIXTURES.md §2).
 
     Text spans pass through; each media span becomes one 'cue' span per
     merged composition, carrying the source media_ref/offset, ordered by
-    (offset, seq) via the struct sort key.  ``mode`` picks the kernel plan:
-    ``'fused'`` decodes each payload in one kernel, ``'two_phase'`` parses
-    first and rebalances the compositions before decode + OCR, so one huge
-    payload fans out.  The decode follows the reference defaults (no merge
-    overrides, the multi-object opacity quirk replicated).
+    (offset, seq) via the struct sort key.  One plan: the scan, one kernel
+    that decodes each payload whole, then the fold.  The decode follows the
+    reference defaults (no merge overrides, the multi-object opacity quirk
+    replicated).
     """
-    return _fold(_kernel_rows(_span_rows(documents), mode, backend))
+    return _fold(_kernel_rows(_span_rows(documents), backend))

@@ -1,7 +1,7 @@
 """Streaming extraction: readStream(documents) -> flat cue/text span rows,
 plus the foreachBatch compaction that folds them to per-doc spans.
 
-Two facades over the same batch kernels (kernels.py):
+Two facades over the same batch kernel (kernels.py):
 
   * ``extract_stream`` — append-mode FLAT span rows (text passthrough +
     cues): the shape for downstream streaming consumers and ad-hoc
@@ -51,7 +51,7 @@ def extract_stream_compacted(documents: DataFrame, out_path: str, checkpoint_dir
     trigger (``.trigger(availableNow=True).start()`` drains the backlog
     and stops, the equivalence-test mode)."""
     def compact(batch_docs: DataFrame, _batch_id: int) -> None:
-        # the full batch pipeline per micro-batch: kernels, shape
+        # the full batch pipeline per micro-batch: kernel, shape
         # preservation, ordering — byte-identical rows to a batch run
         extract(batch_docs).write.mode("append").parquet(out_path)
 

@@ -17,8 +17,8 @@ import bench
 
 def test_record_is_min_over_all_samples_not_min_over_clean(monkeypatch):
     """Every pass samples every query once, in round-robin order, and the
-    record is the fastest sample wherever it landed (the 24.4s-vs-14.3s
-    extract_two_phase case: a slow first pass must not set the record)."""
+    record is the fastest sample wherever it landed (a slow first pass,
+    24.4 s against a later 14.3 s, must not set the record)."""
     clock = [0.0]
     monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
     secs = {"a": iter([24.4, 14.3, 20.0, 15.0]), "b": iter([1.0] * bench.PASSES)}
@@ -38,10 +38,10 @@ def test_record_is_min_over_all_samples_not_min_over_clean(monkeypatch):
 
 
 def _result() -> dict:
-    """A full-size run_bench result: 25 queries + 2 skew queries."""
-    names = ["extract_fused", "extract_two_phase", *bench.DRIVER_QUERIES]
+    """A full-size run_bench result: 24 queries + 1 skew query."""
+    names = ["extract_fused", *bench.DRIVER_QUERIES]
     samples = {n: [123.456] * bench.PASSES for n in names}
-    skew_samples = {n: [123.456] * bench.PASSES for n in ("skew_fused", "skew_two_phase")}
+    skew_samples = {"skew_fused": [123.456] * bench.PASSES}
     return {
         "metric": "extraction wall-clock (fused pipeline, interleaved corpus "
         "replicated into the work-dominated regime; min of 4 interleaved passes)",
@@ -59,7 +59,6 @@ def _result() -> dict:
             "shapes": "1 doc x 1000 media spans + 8 docs x 1 multi-MB span",
             "queries": {n: min(ss) for n, ss in skew_samples.items()},
             "samples": skew_samples,
-            "two_phase_default_width": 128,
         },
     }
 
@@ -69,14 +68,14 @@ def test_printed_line_fits_the_driver_tail():
     records no headline at all."""
     result = _result()
     names = list(result["queries"])
-    assert len(names) == 25
+    assert len(names) == 24
     detail_file = "/" + "d" * 120 + "/BENCH/r5_bench_detail.json"
     line = bench._compact(result, detail_file)
     assert len(line) < 2000
     assert "samples" not in line
     parsed = json.loads(line)
     assert set(parsed["queries"]) == set(names)
-    assert set(parsed["skew"]["queries"]) == {"skew_fused", "skew_two_phase"}
+    assert set(parsed["skew"]["queries"]) == {"skew_fused"}
     assert parsed["detail_file"] == detail_file
 
 

@@ -1,11 +1,12 @@
 """Hostile input: no payload bytes may kill a kernel.
 
 Seeded mutations of the seven corpus variants (bit flips, truncation,
-0xFFFF written into length/size fields) go through the fused kernel and
-through parse + OCR, in-process.  Every payload must come out as either a
-``_metric`` row (its cues, plus one ``_error`` row per dropped
-composition) or exactly one classified seq-0 ``_error`` row, identically
-in both plans, within fixed CPU and memory bounds.
+0xFFFF written into length/size fields) go through the extraction kernel
+in-process.  Every payload must come out as either a ``_metric`` row (its
+cues, plus one ``_error`` row per dropped composition) or exactly one
+classified seq-0 ``_error`` row, with the same cues and errors as the
+pure-Python oracle, within fixed CPU and memory bounds.  The media probe
+kernel must survive the same payloads and truncated container headers.
 """
 
 from __future__ import annotations
@@ -20,14 +21,21 @@ import pytest
 
 from pgstosrt_spark.fixtures import encoder as enc
 from pgstosrt_spark.fixtures.corpus import N_VARIANTS, _media_payload
-from pgstosrt_spark.kernels import make_fused_kernel, make_ocr_kernel, make_parse_kernel
-from pgstosrt_spark.pgs.decode import pack_mkv_packets, unpack_mkv_packets
+from pgstosrt_spark.kernels import make_fused_kernel
+from pgstosrt_spark.multimodal import probe_kernel
+from pgstosrt_spark.pgs.decode import (
+    MKV_MAGIC,
+    decode_media_payload,
+    pack_mkv_packets,
+    unpack_mkv_packets,
+)
+from pgstosrt_spark.pgs.ebml import EBML_MAGIC
 from pgstosrt_spark.pgs.model import DecodeError
 
 CUES = ["HI THERE", "OK", "GO"]
 N_PAYLOADS = 300
-# Per payload, both plans together; the worst measured is ~40 ms of CPU and
-# ~8 MB (one canvas at rle.MAX_CANVAS_PIXELS).
+# Per payload through the kernel; the worst measured is ~30 ms of CPU and
+# ~12 MB (one canvas at rle.MAX_CANVAS_PIXELS).
 MAX_CPU_S = 0.5
 MAX_PEAK_BYTES = 64 << 20
 
@@ -88,6 +96,19 @@ def _rows(out: pd.DataFrame) -> list[tuple[int, str, str]]:
     )
 
 
+def _oracle_rows(payload: bytes) -> list[tuple[int, str, str]]:
+    """The kernel's cue and ``_error`` rows for ``payload``, derived from
+    the pure-Python oracle: a payload that raises is one seq-0 error."""
+    dropped: list = []
+    try:
+        cues = decode_media_payload(payload, errors=dropped)
+    except Exception as exc:
+        return [(0, "_error", f"{type(exc).__name__}: {exc}")]
+    rows = [(seq, "cue", text) for seq, text in cues]
+    rows += [(seq, "_error", f"{type(exc).__name__}: {exc}") for seq, exc in dropped]
+    return sorted(rows)
+
+
 def _check_contained(out: pd.DataFrame) -> None:
     """Either the payload decoded (one ``_metric`` row, no seq-0 error) or
     it failed as a whole: exactly one seq-0 ``DecodeError`` row."""
@@ -108,22 +129,19 @@ def test_mutated_payloads_are_contained_and_agree():
         batch = _batch(payload)
         t0 = time.process_time()
         (fused,) = make_fused_kernel()(iter([batch]))
-        (comps,) = make_parse_kernel()(iter([batch]))
-        (two_phase,) = make_ocr_kernel()(iter([comps]))
         worst_cpu = max(worst_cpu, time.process_time() - t0)
         where = f"payload {i} (variant {variant})"
-        for out in (fused, two_phase):
-            try:
-                _check_contained(out)
-            except AssertionError as exc:
-                raise AssertionError(f"{where}: {exc}") from None
-        assert _rows(fused) == _rows(two_phase), where
+        try:
+            _check_contained(fused)
+        except AssertionError as exc:
+            raise AssertionError(f"{where}: {exc}") from None
+        assert _rows(fused) == _oracle_rows(payload), where
         for seq, kind, _text in _rows(fused):
             outcomes.add(kind if kind == "cue" else ("payload" if seq == 0 else "comp"))
 
         tracemalloc.start()
         try:
-            make_fused_kernel()(iter([batch]))
+            (_out,) = make_fused_kernel()(iter([batch]))
             worst_peak = max(worst_peak, tracemalloc.get_traced_memory()[1])
         finally:
             tracemalloc.stop()
@@ -147,3 +165,32 @@ def test_truncated_mkpg_framing_is_a_decode_error(cut):
     assert unpack_mkv_packets(payload) == [(0, 1000, b"x" * 10)]
     with pytest.raises(DecodeError):
         unpack_mkv_packets(payload[:cut])
+
+
+# ------------------------------------------------------------ media probe
+
+
+def _probe(payload: bytes) -> dict:
+    batch = pd.DataFrame({"media_ref": ["m"], "payload": [payload]})
+    (out,) = probe_kernel(iter([batch]))
+    (row,) = out.to_dict("records")
+    return row
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [MKV_MAGIC, MKV_MAGIC + b"\x00\x00", MKV_MAGIC + b"\x00\x00\x00", EBML_MAGIC, b"PG"],
+    ids=["mkpg-magic-only", "mkpg-half-count", "mkpg-7-bytes", "ebml-magic-only", "sup-magic-only"],
+)
+def test_probe_kernel_survives_truncated_headers(payload):
+    """A container header too short to hold its count probes as zero
+    units instead of raising out of the task."""
+    row = _probe(payload)
+    assert row["n_units"] == 0
+    assert row["n_bytes"] == len(payload)
+
+
+def test_probe_kernel_survives_mutated_payloads():
+    for i, (variant, payload) in enumerate(_mutated_payloads(seed=5, n=N_PAYLOADS)):
+        row = _probe(payload)
+        assert row["n_bytes"] == len(payload), f"payload {i} (variant {variant})"

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pgstosrt_spark.fixtures import corpus, encoder as enc
+from pgstosrt_spark.pgs.decode import decode_media_payload
 from pgstosrt_spark.pipeline import extract, extract_cue_rows, split_side_channel
 from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA
 
@@ -32,6 +33,30 @@ def _collect_spans(df):
     }
 
 
+def _oracle_spans(docs):
+    """The pure-Python oracle over a documents DataFrame: per doc, text
+    spans pass through, each media span becomes its decoded cues, every
+    other kind is dropped, in (offset, seq) order."""
+    out = {}
+    for r in docs.collect():
+        spans = []
+        for s in sorted(r["spans"], key=lambda s: s["offset"]):
+            if s["kind"] == "text":
+                spans.append(("text", s["text"], s["media_ref"]))
+            elif s["kind"] == "media":
+                cues = decode_media_payload(base64.b64decode(s["text"]))
+                spans += [("cue", text, s["media_ref"]) for _seq, text in cues]
+        out[r["doc_id"]] = spans
+    return out
+
+
+def _error_rows(payload: bytes):
+    """(seq, ``<error class>: ...``) of each composition the oracle drops."""
+    dropped: list = []
+    decode_media_payload(payload, errors=dropped)
+    return [(seq, f"{type(exc).__name__}: {exc}") for seq, exc in dropped]
+
+
 @pytest.fixture(scope="module")
 def small_docs(spark):
     """16 synthesized interleaved docs covering all corpus variants."""
@@ -48,13 +73,6 @@ def test_extract_fused_matches_oracle(spark, small_docs):
     docs, rows = small_docs
     got = _collect_spans(extract(docs))
     assert got == _expected(rows)
-
-
-def test_extract_two_phase_matches_fused(spark, small_docs):
-    docs, rows = small_docs
-    fused = _collect_spans(extract(docs, mode="fused"))
-    two_phase = _collect_spans(extract(docs, mode="two_phase"))
-    assert two_phase == fused == _expected(rows)
 
 
 def test_extract_balance_equivalent(spark, small_docs):
@@ -91,8 +109,8 @@ def test_span_order_is_offset_then_seq(spark):
     assert offsets == [0, 1, 1, 2]
 
 
-@pytest.mark.parametrize("mode", ["fused", "two_phase"])
-def test_metrics_side_channel_and_error_rows(spark, mode):
+@pytest.mark.parametrize("plan", ["fused"])  # the id names the one plan
+def test_metrics_side_channel_and_error_rows(spark, plan):
     good = base64.b64encode(enc.build_sup_from_cues([("OK", 90_000, 180_000)])).decode()
     bad = base64.b64encode(b"MKPG" + b"\xff" * 8).decode()  # truncated container
     docs = spark.createDataFrame(
@@ -107,7 +125,7 @@ def test_metrics_side_channel_and_error_rows(spark, mode):
         ],
         schema=DOCUMENTS_SCHEMA,
     )
-    rows = extract_cue_rows(docs, mode=mode)
+    rows = extract_cue_rows(docs)
     cues, side = split_side_channel(rows)
     side_rows = {r["kind"]: r for r in side.collect()}
     assert "_metric" in side_rows and "_error" in side_rows
@@ -115,7 +133,7 @@ def test_metrics_side_channel_and_error_rows(spark, mode):
     assert cues.count() == 1
     # errors never silently vanish from the side channel, but the extracted
     # output keeps only the success path (reference drops failed items)
-    [doc] = extract(docs, mode=mode).collect()
+    [doc] = extract(docs).collect()
     assert [s["kind"] for s in doc["spans"]] == ["cue"]
 
     # per-partition lineage rollup: payload/comp/byte/wall totals reconcile
@@ -129,13 +147,13 @@ def test_metrics_side_channel_and_error_rows(spark, mode):
 
 
 def test_fused_and_parse_kernels_write_one_metric_record():
-    """Direct kernel calls: the fused and parse kernels' ``_metric`` rows
-    for the same payload carry the same keys, those of METRIC_SCHEMA."""
+    """Direct kernel call: the payload's one ``_metric`` row carries the
+    keys of METRIC_SCHEMA."""
     import json
 
     import pandas as pd
 
-    from pgstosrt_spark.kernels import METRIC_SCHEMA, make_fused_kernel, make_parse_kernel
+    from pgstosrt_spark.kernels import METRIC_SCHEMA, make_fused_kernel
 
     payload = enc.build_sup_from_cues([("OK", 90_000, 180_000)])
     batch = pd.DataFrame(
@@ -149,14 +167,8 @@ def test_fused_and_parse_kernels_write_one_metric_record():
         }
     )
     (fused,) = make_fused_kernel()(iter([batch]))
-    (comps,) = make_parse_kernel()(iter([batch]))
-    keys = [
-        set(json.loads(t))
-        for out in (fused, comps)
-        for t in out.loc[out["kind"] == "_metric", "text"]
-    ]
-    assert len(keys) == 2 and keys[0] == keys[1]
-    assert keys[0] == {field.split()[0] for field in METRIC_SCHEMA.split(",")}
+    keys = [set(json.loads(t)) for t in fused.loc[fused["kind"] == "_metric", "text"]]
+    assert keys == [{field.split()[0] for field in METRIC_SCHEMA.split(",")}]
 
 
 def test_all_failed_doc_keeps_shape(spark):
@@ -181,9 +193,9 @@ def test_all_failed_doc_keeps_shape(spark):
     assert side.filter(side.kind == "_error").count() == 1
 
 
-@pytest.mark.parametrize("mode", ["fused", "two_phase"])
-def test_doc_without_spans_keeps_shape(spark, mode):
-    """A doc with ``spans=[]`` comes out with ``[]`` in every mode.  (That
+@pytest.mark.parametrize("plan", ["fused"])  # the id names the one plan
+def test_doc_without_spans_keeps_shape(spark, plan):
+    """A doc with ``spans=[]`` comes out with ``[]``.  (That
     its all-null row shares a kernel batch with other rows is pinned by
     ``test_kernels_pass_non_media_rows_through_once``.)"""
     payload = base64.b64encode(enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])).decode()
@@ -200,7 +212,7 @@ def test_doc_without_spans_keeps_shape(spark, mode):
         ],
         schema=DOCUMENTS_SCHEMA,
     ).coalesce(1)
-    got = _collect_spans(extract(docs, mode=mode))
+    got = _collect_spans(extract(docs))
     assert got == {
         "empty": [],
         "m": [("text", "t", ""), ("cue", "00:00:01,000 --> 00:00:02,000\nSOLO", "pgs://m/0")],
@@ -228,16 +240,16 @@ def test_unknown_kind_spans_are_dropped(spark):
     )
     want = {"d": [("text", "t", ""), ("cue", "00:00:01,000 --> 00:00:02,000\nSOLO", "pgs://d/3")]}
     assert _collect_spans(extract(docs)) == want
-    assert _collect_spans(extract(docs, mode="two_phase")) == want
+    assert _oracle_spans(docs) == want
 
 
 def test_kernels_pass_non_media_rows_through_once():
     """Direct kernel calls: a text row and a null-kind row (a doc without
     spans) each come out exactly once, with ``seq=0``, their kind, text
-    and media_ref, from the fused kernel and from parse + OCR."""
+    and media_ref; the media row becomes the oracle's cue."""
     import pandas as pd
 
-    from pgstosrt_spark.kernels import make_fused_kernel, make_ocr_kernel, make_parse_kernel
+    from pgstosrt_spark.kernels import make_fused_kernel
 
     payload = enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])
     batch = pd.DataFrame(
@@ -250,28 +262,26 @@ def test_kernels_pass_non_media_rows_through_once():
             "payload": [None, payload, None],
         }
     )
-    (fused,) = make_fused_kernel()(iter([batch]))
-    (comps,) = make_parse_kernel()(iter([batch]))
-    (two_phase,) = make_ocr_kernel()(iter([comps]))
-    for out in (fused, two_phase):
-        text = out[out["kind"] == "text"]
-        assert text[["doc_id", "offset", "seq", "text", "media_ref"]].values.tolist() == [
-            ["d", 0, 0, "hello", ""]
-        ]
-        null = out[out["kind"].isna()]
-        assert len(null) == 1 and null["doc_id"].tolist() == ["e"]
-        assert null["seq"].tolist() == [0] and null["offset"].isna().all()
-        assert out["kind"].tolist().count("cue") == 1
-        assert out["kind"].tolist().count("_metric") == 1
+    (out,) = make_fused_kernel()(iter([batch]))
+    text = out[out["kind"] == "text"]
+    assert text[["doc_id", "offset", "seq", "text", "media_ref"]].values.tolist() == [
+        ["d", 0, 0, "hello", ""]
+    ]
+    null = out[out["kind"].isna()]
+    assert len(null) == 1 and null["doc_id"].tolist() == ["e"]
+    assert null["seq"].tolist() == [0] and null["offset"].isna().all()
+    cue = out[out["kind"] == "cue"]
+    assert list(zip(cue["seq"], cue["text"])) == decode_media_payload(payload)
+    assert out["kind"].tolist().count("_metric") == 1
 
 
 def test_kernels_turn_a_null_offset_media_row_into_one_error():
     """Direct kernel calls: a media row without an offset becomes exactly
-    one ``_error`` row (seq 0, null offset) naming the cause, from the
-    fused kernel and from parse + OCR; the batch's other rows survive."""
+    one ``_error`` row (seq 0, null offset) naming the cause; the batch's
+    other media row becomes the oracle's cue."""
     import pandas as pd
 
-    from pgstosrt_spark.kernels import make_fused_kernel, make_ocr_kernel, make_parse_kernel
+    from pgstosrt_spark.kernels import make_fused_kernel
 
     payload = enc.build_sup_from_cues([("SOLO", 90_000, 180_000)])
     batch = pd.DataFrame(
@@ -284,23 +294,22 @@ def test_kernels_turn_a_null_offset_media_row_into_one_error():
             "payload": [payload, payload],
         }
     )
-    (fused,) = make_fused_kernel()(iter([batch]))
-    (comps,) = make_parse_kernel()(iter([batch]))
-    (two_phase,) = make_ocr_kernel()(iter([comps]))
-    for out in (fused, two_phase):
-        err = out[out["offset"].isna()]
-        assert err[["doc_id", "seq", "kind", "media_ref"]].values.tolist() == [
-            ["d", 0, "_error", "pgs://d/1"]
-        ]
-        assert "null offset" in err["text"].iloc[0]
-        assert out["kind"].tolist().count("cue") == 1
-        assert out["kind"].tolist().count("_metric") == 1
+    (out,) = make_fused_kernel()(iter([batch]))
+    err = out[out["offset"].isna()]
+    assert err[["doc_id", "seq", "kind", "media_ref"]].values.tolist() == [
+        ["d", 0, "_error", "pgs://d/1"]
+    ]
+    assert "null offset" in err["text"].iloc[0]
+    cue = out[out["kind"] == "cue"]
+    assert cue["media_ref"].tolist() == ["pgs://d/2"]
+    assert list(zip(cue["seq"], cue["text"])) == decode_media_payload(payload)
+    assert out["kind"].tolist().count("_metric") == 1
 
 
 def test_null_offset_media_span_is_one_error_row(spark, tmp_path):
     """A parquet ``documents`` table written with a nullable ``offset``
     (the read does not enforce DOCUMENTS_SCHEMA's NOT NULL) and one media
-    span without an offset: both modes complete, that span is one
+    span without an offset: the job completes, that span is one
     ``_error`` row (seq 0, null offset) naming the cause, and the doc
     keeps its other spans."""
     from pyspark.sql import types as T
@@ -328,19 +337,18 @@ def test_null_offset_media_span_is_one_error_row(spark, tmp_path):
     ).write.parquet(src)
     docs = read_documents(spark, src)
     want = {"d": [("text", "t", ""), ("cue", "00:00:01,000 --> 00:00:02,000\nSOLO", "pgs://d/2")]}
-    for mode in ("fused", "two_phase"):
-        assert _collect_spans(extract(docs, mode=mode)) == want
-        _cues, side = split_side_channel(extract_cue_rows(docs, mode=mode))
-        [err] = [tuple(r) for r in side.filter(side.kind == "_error").collect()]
-        assert err[:4] == ("d", None, 0, "_error") and err[5] == "pgs://d/1"
-        assert "null offset" in err[4]
+    assert _collect_spans(extract(docs)) == want
+    _cues, side = split_side_channel(extract_cue_rows(docs))
+    [err] = [tuple(r) for r in side.filter(side.kind == "_error").collect()]
+    assert err[:4] == ("d", None, 0, "_error") and err[5] == "pgs://d/1"
+    assert "null offset" in err[4]
 
 
 def test_fused_job_reports_planted_huge_ods(spark, small_docs):
     """A 65535x65535 ODS inside a Spark job: the job completes, its doc
     keeps the other cues, the dropped composition is exactly one
-    ``_error`` row in the side channel (as in two-phase), and every other
-    doc still matches the oracle."""
+    ``_error`` row in the side channel, the one the oracle drops, and every
+    other doc still matches the oracle."""
     docs, rows = small_docs
     planted = (
         enc.build_sup_from_cues([("ONE", 90_000, 180_000)])
@@ -356,13 +364,10 @@ def test_fused_job_reports_planted_huge_ods(spark, small_docs):
     assert [t.split("\n", 1)[1] for _k, t, _r in got.pop("huge")] == ["ONE", "THREE"]
     assert got == _expected(rows)
 
-    def errors(mode):
-        _cues, side = split_side_channel(extract_cue_rows(docs, mode=mode))
-        return [tuple(r) for r in side.filter(side.kind == "_error").collect()]
-
-    [err] = errors("fused")
+    _cues, side = split_side_channel(extract_cue_rows(docs))
+    [err] = [tuple(r) for r in side.filter(side.kind == "_error").collect()]
     assert err[:4] == ("huge", 0, 2, "_error") and err[4].startswith("DecodeError: ")
-    assert errors("two_phase") == [err]
+    assert _error_rows(planted) == [(err[2], err[4])]
 
 
 def test_media_only_and_text_only_docs(spark):
@@ -380,7 +385,7 @@ def test_media_only_and_text_only_docs(spark):
 
 
 def test_skew_doc_many_media_spans(spark):
-    """F14 skew: one doc with many media spans — two-phase == fused."""
+    """F14 skew: one doc with many media spans — extract == the oracle."""
     spans = []
     for i in range(60):
         p = base64.b64encode(
@@ -389,17 +394,16 @@ def test_skew_doc_many_media_spans(spark):
         spans.append({"kind": "media", "text": p, "media_ref": f"pgs://skew/{i}", "offset": i})
     docs = spark.createDataFrame([{"doc_id": "skew", "spans": spans}], schema=DOCUMENTS_SCHEMA)
     fused = _collect_spans(extract(docs))
-    two_phase = _collect_spans(extract(docs, mode="two_phase"))
-    assert fused == two_phase
+    assert fused == _oracle_spans(docs)
     assert len(fused["skew"]) == 60
 
 
 def test_skew_bench_corpus_mode_equivalence(spark):
     """The bench's skewed corpus (1 wide doc + monster single-span docs,
-    fixtures.corpus.synthesize_skewed_documents) must extract identically
-    under fused and two_phase — the skew bench (VERDICT r2 item 2) times
-    both modes, so their equivalence is the precondition for the
-    comparison meaning anything."""
+    fixtures.corpus.synthesize_skewed_documents) must extract exactly as
+    the pure-Python oracle decodes it — the skew bench (VERDICT r2 item 2)
+    times this extraction, so its correctness is the precondition for the
+    timing meaning anything."""
     from pgstosrt_spark.fixtures.corpus import synthesize_skewed_documents
 
     sk = synthesize_skewed_documents(
@@ -414,15 +418,14 @@ def test_skew_bench_corpus_mode_equivalence(spark):
         ("skew-monster-1", 1),
         ("skew-wide-0", 64),
     ]
-    want = _collect_spans(extract(sk, mode="fused"))
+    want = _collect_spans(extract(sk))
     assert len(want["skew-monster-0"]) == 40
-    assert _collect_spans(extract(sk, mode="two_phase")) == want
+    assert _oracle_spans(sk) == want
     sk.unpersist()
 
 
 def test_srt_render_matches_pure_python(spark, small_docs):
     """O5: Spark-side SubRip rendering == pgs.srt.render_srt byte-for-byte."""
-    from pgstosrt_spark.pgs.decode import decode_media_payload
     from pgstosrt_spark.pipeline import render_srt_documents
 
     docs, rows = small_docs
@@ -450,13 +453,13 @@ def test_srt_render_matches_pure_python(spark, small_docs):
 
 
 def test_extract_takes_mode_and_backend_only(spark, small_docs):
-    """The extraction API is one plan in two modes: no tuning knobs."""
+    """The extraction API is one plan: no mode, no tuning knobs."""
     import inspect
 
-    assert list(inspect.signature(extract).parameters) == ["documents", "mode", "backend"]
+    assert list(inspect.signature(extract).parameters) == ["documents", "backend"]
     docs, _rows = small_docs
-    with pytest.raises(ValueError, match="size_bucketed"):
-        extract(docs, mode="size_bucketed")
+    with pytest.raises(TypeError, match="mode"):
+        extract(docs, mode="fused")
 
 
 def test_workload_session_policy(spark):

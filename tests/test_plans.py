@@ -192,8 +192,8 @@ def _parquet_documents(spark, path, rows):
 
 
 def test_extraction_plan_single_pass_no_payload_shuffle(spark, tmp_path):
-    """Fused mode: the only Exchange is the final groupBy(doc_id) of small
-    string rows — base64 payloads never shuffle."""
+    """The only Exchange is the final groupBy(doc_id) of small string rows
+    — base64 payloads never shuffle."""
     import base64
 
     from pgstosrt_spark.fixtures import encoder as enc
@@ -227,10 +227,10 @@ def test_extraction_plan_single_pass_no_payload_shuffle(spark, tmp_path):
 
 def test_extraction_plan_one_scan_one_fold(spark, tmp_path):
     """Over a parquet ``documents`` table, extract() reads the table once
-    and folds without a join: fused has exactly 1 FileScan and 1 Exchange
-    (the groupBy), 2 Exchanges when the rebalance fires (one input
-    partition); two_phase also scans once; no mode plans a Join or a
-    BroadcastExchange."""
+    and folds without a join: exactly 1 FileScan and 1 Exchange (the
+    groupBy), 2 Exchanges when the rebalance fires (one input partition),
+    and exactly one Python stage (MapInPandas) either way; no plan has a
+    Join or a BroadcastExchange."""
     import base64
     import re
 
@@ -253,18 +253,17 @@ def test_extraction_plan_one_scan_one_fold(spark, tmp_path):
         ],
     )
 
-    def counts(docs, mode="fused"):
-        plan = extract(docs, mode)._jdf.queryExecution().executedPlan().toString()
+    def counts(docs):
+        plan = extract(docs)._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan and "BroadcastExchange" not in plan, plan
         return (
             len(re.findall(r"\bFileScan\b", plan)),
             len(re.findall(r"\b(?:Exchange|ShuffleExchange)\b", plan)),
+            len(re.findall(r"\bMapInPandas\b", plan)),
         )
 
-    assert counts(docs) == (1, 1)
-    assert counts(docs.coalesce(1)) == (1, 2)
-    assert counts(docs, mode="two_phase")[0] == 1
-    assert counts(docs.coalesce(1), mode="two_phase")[0] == 1
+    assert counts(docs) == (1, 1, 1)
+    assert counts(docs.coalesce(1)) == (1, 2, 1)
 
 
 def test_asof_join_is_single_shuffle_no_join(spark):

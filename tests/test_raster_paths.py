@@ -10,7 +10,6 @@ object or union canvas beyond ``MAX_CANVAS_PIXELS`` is ever allocated.
 
 from __future__ import annotations
 
-import pickle
 import struct
 import tracemalloc
 
@@ -20,7 +19,7 @@ import pytest
 
 from pgstosrt_spark.fixtures import encoder as enc
 from pgstosrt_spark.fixtures.corpus import N_VARIANTS, _media_payload
-from pgstosrt_spark.kernels import make_fused_kernel, make_ocr_kernel, make_parse_kernel
+from pgstosrt_spark.kernels import make_fused_kernel
 from pgstosrt_spark.pgs import decode, rle
 from pgstosrt_spark.pgs.compose import rasterize
 from pgstosrt_spark.pgs.decode import (
@@ -124,22 +123,21 @@ def test_backend_without_attribute_gets_padded_rgba(variant):
         c.text for c in display_sets_to_cues(sets, backend=GlyphAtlasOcr())
     ]
 
-    two_phase = RecordingBackend()
+    kernel = RecordingBackend()
     batch = pd.DataFrame(
         {
-            "doc_id": ["d"] * len(sets),
-            "offset": [0] * len(sets),
-            "seq": list(range(1, len(sets) + 1)),
-            "kind": ["comp"] * len(sets),
-            "media_ref": ["m"] * len(sets),
-            "pcs": [pickle.dumps(p) for p in sets],
-            "text": [""] * len(sets),
+            "doc_id": ["d"],
+            "offset": [0],
+            "kind": ["media"],
+            "media_ref": ["m"],
+            "text": [None],
+            "payload": [_media_payload(CUES, variant)],
         }
     )
-    (out,) = make_ocr_kernel(backend=two_phase)(iter([batch]))
-    assert out["kind"].tolist() == ["cue"] * len(sets)
+    (out,) = make_fused_kernel(backend=kernel)(iter([batch]))
+    assert out["kind"].tolist() == ["cue"] * len(sets) + ["_metric"]
 
-    for backend in (inline, two_phase):
+    for backend in (inline, kernel):
         assert all(c.dtype == np.uint8 and c.ndim == 3 for c in backend.canvases)
         shapes = [
             c.shape
@@ -302,10 +300,10 @@ def test_composition_raising_any_error_is_dropped():
 
 
 def test_fused_kernel_error_rows_match_two_phase():
-    """The fused kernel emits the same ``_error`` row (seq = composition
-    number, ``<error class>: ...``) as parse + OCR do for a composition the
-    decode drops, next to the same cues (kernels run in-process): a
-    DecodeError (huge ODS) and any other exception (missing ODS)."""
+    """The fused kernel (in-process) emits one ``_error`` row (seq =
+    composition number, ``<error class>: ...``) for the composition the
+    pure-Python oracle drops, next to the oracle's cues: a DecodeError
+    (huge ODS) and any other exception (missing ODS)."""
     for payload, error_class in (
         (_huge_ods_payload(), "DecodeError"),
         (_missing_ods_payload(), "IndexError"),
@@ -321,16 +319,16 @@ def test_fused_kernel_error_rows_match_two_phase():
             }
         )
         (fused,) = make_fused_kernel()(iter([batch]))
-        (comps,) = make_parse_kernel()(iter([batch]))
-        (two_phase,) = make_ocr_kernel()(iter([comps]))
+        dropped: list = []
+        cues = decode_media_payload(payload, errors=dropped)
 
         def rows(df, kind):
             return sorted(map(tuple, df[df["kind"] == kind].itertuples(index=False)))
 
-        assert rows(fused, "cue") == rows(two_phase, "cue")
-        assert len(rows(fused, "cue")) == 2
+        assert rows(fused, "cue") == [("d", 3, seq, "cue", t, "m") for seq, t in cues]
+        assert len(cues) == 2
         (err,) = rows(fused, "_error")
-        assert rows(two_phase, "_error") == [err]
+        assert [(err[2], err[4])] == [(seq, f"{type(e).__name__}: {e}") for seq, e in dropped]
         assert err[:3] == ("d", 3, 2) and err[4].startswith(f"{error_class}: ")
         assert fused["kind"].tolist().count("_metric") == 1
 
